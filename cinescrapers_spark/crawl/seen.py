@@ -11,25 +11,28 @@ Design (SURVEY §4.3):
 * shard key = ``pmod(url_hash, P)`` — the SAME hash partitioning is used for
   the shard state and the candidate shuffle, so probe and state colocate
   (one shuffle of the candidates, zero shuffle of the state);
-* per shard: a numpy bloom filter (fast negative; never authoritative) in
+* per shard segment: a Bloom filter (``plans/bloom.IntBloom``, sized from
+  the segment's own key count; fast negative, never authoritative) in
   front of a SORTED uint64 array probed by binary search — exact membership
-  over the 64-bit hashes, FPR=0 on the authoritative path (a bloom- or
-  cuckoo-only design would let false positives silently drop URLs, which
-  the "URL-seen membership must match the reference" gate forbids);
+  over the 64-bit hashes, FPR=0 on the authoritative path (a filter-only
+  design would let false positives silently drop URLs, which the
+  "URL-seen membership must match the reference" gate forbids);
 * probe and insert run inside ``cogroup().applyInPandas`` — Arrow-batched,
   no per-row Python, state in/out as binary blobs;
 * **storage is merge-on-read**: each tick commits a *run* — one blob per
   TOUCHED shard holding only that tick's fresh keys — so per-tick write
   bytes are O(new keys), not O(total keys) (a full-state rewrite per tick
-  is ~78 GB at 10^10 keys / P=4096 and would dominate tick wall-clock).
+  is ~92 GB at 10^10 keys — 8 B of key + 1.25 B of Bloom each — and would
+  dominate tick wall-clock).
   Probes union the newest base with the runs after it; ``compact`` folds
   base+runs into a fresh base, mirroring the frontier's MOR compaction;
 * every commit is idempotent per (tick, kind) → a crashed tick re-runs
   against the state *as of its parent tick* and re-commits safely.
 
-At 10^10 URLs / P=4096 shards: ~2.4M hashes/shard = 19 MB exact + ~3 MB
-bloom in the compacted base — comfortably an executor-memory object; P
-scales linearly with the frontier.
+At 10^10 URLs / P=4096 shards: ~2.44M hashes/shard = 19.5 MB exact +
+3.05 MB Bloom (10 bits/key, ≈0.8% false positives) in the compacted
+base — comfortably an executor-memory object; P scales linearly with the
+frontier.
 """
 
 from __future__ import annotations
@@ -45,14 +48,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cinescrapers_spark.crawl.snapshots import SnapshotTable
+from cinescrapers_spark.plans.bloom import IntBloom
 
 SHARD_SCHEMA = "shard_id int, data binary, n_keys long"
 
-_MAGIC = b"SEEN1"
+# SEEN2: the bloom bytes are ``IntBloom`` bits. A SEEN1 blob (the earlier
+# k=4 filter) probed with this scheme would give false negatives — seen
+# URLs silently re-fetched — so it is refused, not read.
+_MAGIC = b"SEEN2"
 
 
 # --------------------------------------------------------------------------
 # shard blob codec: [magic][n_bloom_bytes][bloom bits][n_keys][sorted u64 keys]
+# zero bloom bytes = no pre-filter (probe the keys exactly)
 # --------------------------------------------------------------------------
 def encode_shard(keys: np.ndarray, bloom: np.ndarray) -> bytes:
     return (
@@ -65,7 +73,8 @@ def encode_shard(keys: np.ndarray, bloom: np.ndarray) -> bytes:
 
 
 def decode_shard(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
-    assert blob[:5] == _MAGIC, "bad shard blob"
+    if bytes(blob[:5]) != _MAGIC:
+        raise ValueError(f"not a {_MAGIC.decode()} seen-shard blob: {bytes(blob[:5])!r}")
     off = 5
     (nb,) = struct.unpack_from("<q", blob, off)
     off += 8
@@ -77,34 +86,12 @@ def decode_shard(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
     return keys, bloom
 
 
-# -- bloom over uint64 keys: k=4 index functions from splitmix64 remixes -----
-def _bloom_positions(keys: np.ndarray, m_bits: int) -> list[np.ndarray]:
-    x = keys.copy()
-    out = []
-    for _ in range(4):
-        x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-        x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-        x = x ^ (x >> np.uint64(31))
-        out.append((x % np.uint64(m_bits)).astype(np.uint64))
-    return out
-
-
-def bloom_add(bloom: np.ndarray, keys: np.ndarray) -> None:
-    m_bits = len(bloom) * 8
-    for pos in _bloom_positions(keys, m_bits):
-        np.bitwise_or.at(bloom, (pos >> np.uint64(3)).astype(np.int64),
-                         (np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8)))
-
-
-def bloom_maybe(bloom: np.ndarray, keys: np.ndarray) -> np.ndarray:
-    """Vector of bools: True = possibly seen, False = definitely new."""
-    m_bits = len(bloom) * 8
-    res = np.ones(len(keys), dtype=bool)
-    for pos in _bloom_positions(keys, m_bits):
-        byte = bloom[(pos >> np.uint64(3)).astype(np.int64)]
-        bit = (byte >> (pos & np.uint64(7)).astype(np.uint8)) & 1
-        res &= bit.astype(bool)
-    return res
+def exact_member(keys: np.ndarray, h: np.ndarray) -> np.ndarray:
+    """Exact membership of hashes ``h`` in the sorted key array ``keys``."""
+    if not len(keys):
+        return np.zeros(len(h), dtype=bool)
+    idx = np.clip(np.searchsorted(keys, h), 0, len(keys) - 1)
+    return keys[idx] == h
 
 
 def _membership(blobs: list[bytes], h: np.ndarray) -> np.ndarray:
@@ -113,19 +100,12 @@ def _membership(blobs: list[bytes], h: np.ndarray) -> np.ndarray:
     seen = np.zeros(len(h), dtype=bool)
     for blob in blobs:
         keys, bloom = decode_shard(blob)
-        if not len(keys):
-            continue
-        todo = ~seen
-        if not todo.any():
+        todo = np.flatnonzero(~seen)
+        if not len(todo):
             break
-        ht = h[todo]
-        maybe = bloom_maybe(bloom, ht) if len(bloom) else np.ones(len(ht), bool)
-        hit = np.zeros(len(ht), dtype=bool)
-        if maybe.any():
-            idx = np.searchsorted(keys, ht[maybe])
-            idx = np.clip(idx, 0, len(keys) - 1)
-            hit[maybe] = keys[idx] == ht[maybe]
-        seen[todo.nonzero()[0][hit]] = True
+        if len(bloom):
+            todo = todo[IntBloom(bloom).contains(h[todo])]
+        seen[todo[exact_member(keys, h[todo])]] = True
     return seen
 
 
@@ -133,15 +113,9 @@ class SeenSet:
     """Sharded seen-set backed by a SnapshotTable of binary shard blobs,
     committed as per-tick runs with periodic base compaction."""
 
-    def __init__(
-        self,
-        table: SnapshotTable,
-        num_shards: int = 64,
-        bloom_bytes_per_shard: int = 1 << 16,
-    ):
+    def __init__(self, table: SnapshotTable, num_shards: int = 64):
         self.table = table
         self.P = num_shards
-        self.bloom_bytes = bloom_bytes_per_shard
 
     # -- column helpers -------------------------------------------------------
     @staticmethod
@@ -223,9 +197,11 @@ class SeenSet:
     ):
         """ONE cogroup pass against the state as of ``tick - 1``: filter
         candidates AND produce this tick's run blobs (fresh keys only, per
-        touched shard). Output is a tagged union — run rows plus the unseen
-        candidate rows — split by the caller. Halves the candidate shuffle
-        vs probe-then-add and drops a barrier from the tick.
+        touched shard). Output is the unseen candidate rows; the first row
+        of each touched shard also carries that shard's run blob in
+        ``shard_id``/``data``/``n_keys`` (null ``data`` elsewhere). Halves
+        the candidate shuffle vs probe-then-add and drops a barrier from
+        the tick.
 
         Within-batch duplicates (the same URL discovered on two pages this
         tick) collide in their shard and are deduped here, keeping the
@@ -243,13 +219,13 @@ class SeenSet:
         cand = candidates.withColumn("__shard", self.shard_col(F.col(hash_col)))
         cand_fields = [f"`{c}`" for c in candidates.columns]
         out_schema = (
-            "__kind string, shard_id int, data binary, n_keys long, "
+            "shard_id int, data binary, n_keys long, "
             + ", ".join(
                 f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
             )
         )
-        bloom_bytes = self.bloom_bytes
         cand_cols = list(candidates.columns)
+        out_cols = ["shard_id", "data", "n_keys"] + cand_cols
         hname = hash_col
         # exemplar rule for within-batch duplicates: min (depth, url) per
         # hash — BFS shortest-path depth first, then the lexicographic url
@@ -261,10 +237,7 @@ class SeenSet:
         ]
 
         def fused(key, cdf: pd.DataFrame, sdf: pd.DataFrame) -> pd.DataFrame:
-            shard_id = int(key[0])
-            empty = pd.DataFrame(
-                columns=["__kind", "shard_id", "data", "n_keys"] + cand_cols
-            )
+            empty = pd.DataFrame(columns=out_cols)
             if not len(cdf):
                 return empty
             cdf = (
@@ -280,25 +253,12 @@ class SeenSet:
             if not len(fresh_rows):
                 return empty
             fresh = np.sort(fresh_rows[hname].to_numpy().astype(np.uint64))
-            bloom = np.zeros(bloom_bytes, dtype=np.uint8)
-            bloom_add(bloom, fresh)
-            shard_row = pd.DataFrame(
-                {
-                    "__kind": ["shard"],
-                    "shard_id": [shard_id],
-                    "data": [encode_shard(fresh, bloom)],
-                    "n_keys": [len(fresh)],
-                    **{c: [None] for c in cand_cols},
-                }
-            )
-            url_rows = fresh_rows.copy()
-            url_rows["__kind"] = "url"
-            url_rows["shard_id"] = None
-            url_rows["data"] = None
-            url_rows["n_keys"] = None
-            return pd.concat([shard_row, url_rows], ignore_index=True)[
-                ["__kind", "shard_id", "data", "n_keys"] + cand_cols
-            ]
+            blob = encode_shard(fresh, IntBloom.build(fresh).bits)
+            return fresh_rows.assign(
+                shard_id=int(key[0]),
+                data=[blob] + [None] * (len(fresh) - 1),
+                n_keys=len(fresh),
+            )[out_cols]
 
         fused_out = (
             cand.groupBy("__shard")
@@ -306,8 +266,8 @@ class SeenSet:
             .applyInPandas(fused, schema=out_schema)
             .cache()
         )
-        unseen = fused_out.filter(F.col("__kind") == "url").select(*cand_fields)
-        new_shards = fused_out.filter(F.col("__kind") == "shard").select(
+        unseen = fused_out.select(*cand_fields)
+        new_shards = fused_out.filter(F.col("data").isNotNull()).select(
             "shard_id", "data", "n_keys"
         )
         return unseen, new_shards, fused_out
@@ -340,7 +300,6 @@ class SeenSet:
         if self.table.entry_for(tick, tag="base") is not None:
             return
         state = self._state_df(spark, as_of=tick)
-        bloom_bytes = self.bloom_bytes
 
         def merge_all(key, sdf):
             parts = [decode_shard(b)[0] for b in sdf["data"]]
@@ -349,13 +308,10 @@ class SeenSet:
                 if parts
                 else np.empty(0, dtype=np.uint64)
             )
-            bloom = np.zeros(bloom_bytes, dtype=np.uint8)
-            if len(keys):
-                bloom_add(bloom, keys)
             return pd.DataFrame(
                 {
                     "shard_id": [int(key[0])],
-                    "data": [encode_shard(keys, bloom)],
+                    "data": [encode_shard(keys, IntBloom.build(keys).bits)],
                     "n_keys": [len(keys)],
                 }
             )

@@ -1,7 +1,8 @@
 """Date/time scalar functions.
 
 The reference's date handling (SURVEY §2.8): fixed strptime formats →
-``to_timestamp`` built-ins; free-text parses → a small pandas UDF;
+``to_timestamp`` built-ins; free-text parses → a pure-Python parser that
+the extractors' Arrow-batched kernels call;
 ``parse_date_without_year``'s "if now.month>6 and parsed.month<3 → next
 year" rollover (``/root/reference/src/cinescrapers/utils.py:16-25``) →
 column expression with an injected ``now`` (never wall-clock inside the
@@ -15,12 +16,8 @@ from __future__ import annotations
 import datetime as _dt
 import re as _re
 
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from cinescrapers_spark.functions.udf import lazy_pandas_udf
 
 RELEASE_YEAR_RE = r"\b((19\d{2})|(20[0-2]\d))\b"  # ref utils.py:9
 
@@ -135,18 +132,6 @@ def parse_freetext_datetime_py(
     if no_year and now.month > 6 and parsed.month < 3:
         parsed = parsed.replace(year=now.year + 1)
     return parsed
-
-
-@lazy_pandas_udf("timestamp_ntz")
-def _freetext_dt_udf(s: pd.Series, now_iso: pd.Series) -> pd.Series:
-    now = _dt.datetime.fromisoformat(now_iso.iloc[0]) if len(now_iso) else None
-    return s.map(lambda x: parse_freetext_datetime_py(x, now))
-
-
-def freetext_datetime_col(col: Column, now: _dt.datetime) -> Column:
-    """Column form of the free-text parser with an injected clock (never
-    wall-clock inside a plan — determinism is a schema property)."""
-    return _freetext_dt_udf(col, F.lit(now.isoformat()))
 
 
 def to_naive_london(ts_utc: Column) -> Column:

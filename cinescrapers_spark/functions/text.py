@@ -1,6 +1,6 @@
 """Text scalar functions: postcode extraction, HTML unescape, and the
 training-data-pipeline text analysis suite (language-ID heuristic, quality
-scoring, token counting, rolling-hash fingerprinting).
+scoring, token counting).
 
 Postcode semantics clone ``/root/reference/src/cinescrapers/utils.py:28-47``
 (regex + uppercase + space insertion); invalid input returns NULL here
@@ -43,20 +43,6 @@ def extract_uk_postcode_udf(text: pd.Series) -> pd.Series:
     no_space = pc.notna() & ~pc.str.contains(" ", na=False)
     pc.loc[no_space] = pc.loc[no_space].str[:-3] + " " + pc.loc[no_space].str[-3:]
     return pc
-
-
-def extract_uk_postcode_col(text: Column) -> Column:
-    """Pure-column variant (no UDF): regexp_extract + conditional spacing.
-    Used on hot paths; exactly equivalent to the UDF."""
-    pc = F.regexp_extract(F.upper(text), UK_POSTCODE_RE, 0)
-    pc = F.when(pc == "", None).otherwise(pc)
-    needs_space = ~pc.contains(" ")
-    spaced = F.concat(
-        F.substring(pc, 1, F.length(pc) - 3).cast("string"),
-        F.lit(" "),
-        F.substring(pc, -3, 3),
-    )
-    return F.when(pc.isNull(), None).when(needs_space, spaced).otherwise(pc)
 
 
 @lazy_pandas_udf("string")
@@ -124,10 +110,3 @@ def token_count_col(text: Column) -> Column:
     letters = F.length(F.regexp_replace(text, r"[^A-Za-z]", "")).cast("double")
     nonword = F.length(F.regexp_replace(text, r"[A-Za-z\s]", "")).cast("double")
     return (F.ceil(letters / F.lit(4.0)) + nonword).cast("long")
-
-
-def fingerprint_col(text: Column) -> Column:
-    """64-bit document fingerprint: xxhash64 of the whitespace/case-folded
-    text (a deterministic stand-in for a rolling hash; JVM-side)."""
-    canon = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    return F.xxhash64(canon)

@@ -1,26 +1,32 @@
-"""Tiny numpy-vectorized Bloom filter over int64 keys — the per-run
-pruning index for incremental state tables (``plans/incremental_cc``).
+"""The engine's one Bloom filter: numpy-vectorized, over int64/uint64 keys.
+
+Users: the seen set's per-shard pre-filter (``crawl/seen.py``, stored in
+the shard blob) and the per-run pruning sidecars of incremental state
+tables (``crawl/snapshots.commit(bloom_col=...)``, read by
+``plans/incremental_cc``).
 
 Why not Spark's builtin bloom machinery: the runtime-filter bloom is an
 optimizer injection (not addressable), and the JVM ``stat.bloomFilter``
 object cannot be probed from executor-side Python without a py4j hop per
-value. This one is ~40 lines, deterministic across processes (pure
-integer splitmix64 mixing, no Python ``hash``), builds and probes whole
-numpy arrays at memory bandwidth, and serializes to a sidecar ``.npz``
-next to the snapshot it indexes.
+value. This one is deterministic across processes (pure integer
+splitmix64 mixing, no Python ``hash``) and builds and probes whole numpy
+arrays at memory bandwidth.
 
-Guarantee: ``might_contain_any`` has NO false negatives — a run whose
-bloom rejects every key of a batch provably contains none of them, so
-skipping it cannot change a lookup's result. False positives only cost
-reading a run that turns out not to match.
+Sizing: every filter is sized from the keys it holds — ``BITS_PER_KEY``
+bits each (1.25 bytes), at least 64 bits, rounded up to whole bytes so
+``m == 8 * len(bits)`` and the bit array alone describes the filter.
+With ``N_HASHES`` = 7 probes the design false-positive rate is ≈0.82%.
+
+Guarantee: ``contains`` has NO false negatives — a key it rejects is
+provably absent, so skipping work on a rejection cannot change a result.
+False positives only cost an exact check that turns out negative.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-# 1% fpp: m/n = 9.585 bits per element, k = 7 probes
-BITS_PER_ELEM = 10
+BITS_PER_KEY = 10
 N_HASHES = 7
 _GOLDEN = np.uint64(0x9E3779B97F4A7C15)
 
@@ -32,47 +38,53 @@ def _mix(x: np.ndarray) -> np.ndarray:
     return x ^ (x >> np.uint64(31))
 
 
+def _hashes(ids) -> tuple[np.ndarray, np.ndarray]:
+    """Double-hashing pair: probe i of a key is ``(h1 + i*h2) mod m``."""
+    x = np.asarray(ids, dtype=np.int64).view(np.uint64)
+    return _mix(x), _mix(x ^ _GOLDEN) | np.uint64(1)
+
+
 class IntBloom:
-    def __init__(self, bits: np.ndarray, m: int, k: int = N_HASHES):
-        self.bits = bits  # uint8 array, ceil(m/8) long
-        self.m = m
-        self.k = k
+    def __init__(self, bits: np.ndarray):
+        self.bits = bits  # uint8, bit j of byte b is position 8*b + j
+        self.m = 8 * len(bits)
 
     @classmethod
-    def build(cls, ids: np.ndarray, bits_per_elem: int = BITS_PER_ELEM) -> "IntBloom":
-        ids = np.asarray(ids, dtype=np.int64).view(np.uint64)
-        m = max(64, int(len(ids) * bits_per_elem))
-        bits = np.zeros((m + 7) // 8, dtype=np.uint8)
-        h1 = _mix(ids)
-        h2 = _mix(ids ^ _GOLDEN) | np.uint64(1)
+    def build(cls, ids) -> "IntBloom":
+        h1, h2 = _hashes(ids)
+        m = -(-max(64, len(h1) * BITS_PER_KEY) // 8) * 8
+        flags = np.zeros(m, dtype=bool)
         for i in range(N_HASHES):
-            idx = (h1 + np.uint64(i) * h2) % np.uint64(m)
-            np.bitwise_or.at(bits, (idx >> np.uint64(3)).astype(np.int64),
-                             np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8))
-        return cls(bits, m)
+            flags[(h1 + np.uint64(i) * h2) % np.uint64(m)] = True
+        return cls(np.packbits(flags, bitorder="little"))
 
-    def might_contain_any(self, ids: np.ndarray) -> bool:
-        """True iff ANY id possibly belongs to the built set (vectorized;
-        no false negatives)."""
-        ids = np.asarray(ids, dtype=np.int64).view(np.uint64)
-        if len(ids) == 0:
-            return False
-        hits = np.ones(len(ids), dtype=bool)
-        h1 = _mix(ids)
-        h2 = _mix(ids ^ _GOLDEN) | np.uint64(1)
-        for i in range(self.k):
-            idx = (h1 + np.uint64(i) * h2) % np.uint64(self.m)
-            byte = self.bits[(idx >> np.uint64(3)).astype(np.int64)]
-            hits &= (byte >> (idx & np.uint64(7)).astype(np.uint8)) & 1 == 1
-            if not hits.any():
-                return False
-        return True
+    def contains(self, ids) -> np.ndarray:
+        """Per-id bool array: False = definitely absent, True = possibly
+        present. Each probe round tests only the ids still in play."""
+        h1, h2 = _hashes(ids)
+        live = np.arange(len(h1))
+        for i in range(N_HASHES):
+            if not len(live):
+                break
+            pos = (h1[live] + np.uint64(i) * h2[live]) % np.uint64(self.m)
+            bit = (self.bits[pos >> np.uint64(3)] >> (pos & np.uint64(7))) & 1
+            live = live[bit == 1]
+        out = np.zeros(len(h1), dtype=bool)
+        out[live] = True
+        return out
 
     def save(self, path: str) -> None:
         np.savez_compressed(path, bits=self.bits,
-                            m=np.int64(self.m), k=np.int64(self.k))
+                            m=np.int64(self.m), k=np.int64(N_HASHES))
 
     @classmethod
     def load(cls, path: str) -> "IntBloom":
+        """Raises ValueError for a sidecar of another layout (``m`` not
+        the whole bit array, or another probe count): probing it with
+        this scheme could give false negatives."""
         z = np.load(path)
-        return cls(z["bits"], int(z["m"]), int(z["k"]))
+        bloom = cls(z["bits"])
+        if int(z["m"]) != bloom.m or int(z["k"]) != N_HASHES:
+            raise ValueError(f"bloom sidecar {path}: m={int(z['m'])}, "
+                             f"k={int(z['k'])} is not this filter's layout")
+        return bloom

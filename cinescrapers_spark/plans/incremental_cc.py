@@ -108,38 +108,38 @@ class IncrementalComponents:
     ) -> list[dict]:
         """Drop nodes runs whose Bloom sidecar rejects EVERY id (no false
         negatives ⇒ dropping them cannot change a lookup). Runs without a
-        bloom (legacy or over-cap compactions) are always kept. One
-        distributed vectorized probe over ``ids``; O(ids × runs) bit
-        probes at numpy speed, zero data read from the runs themselves."""
+        bloom (over-cap compactions, or a sidecar of another layout) are
+        always kept. One distributed vectorized probe over ``ids``;
+        O(ids × runs) bit probes at numpy speed, zero data read from the
+        runs themselves."""
         import os
 
         from cinescrapers_spark.plans.bloom import IntBloom
 
-        with_bloom: list[tuple[int, dict]] = []
         kept: list[dict] = []
+        payload = []
         for i, e in enumerate(entries):
             b = (e.get("metrics") or {}).get("bloom")
-            if b and os.path.exists(os.path.join(self.nodes_table.path, b["file"])):
-                with_bloom.append((i, b))
-            else:
+            path = os.path.join(self.nodes_table.path, b["file"]) if b else None
+            try:
+                bl = IntBloom.load(path) if path and os.path.exists(path) else None
+            except ValueError:  # a sidecar of another layout: read the run
+                bl = None
+            if bl is None:
                 kept.append(e)
-        if not with_bloom:
-            return kept
-        payload = []
-        for i, b in with_bloom:
-            bl = IntBloom.load(os.path.join(self.nodes_table.path, b["file"]))
+                continue
             payload.append(
-                (i, bl.bits, bl.m, bl.k,
-                 b.get("idmin", -(2**63)), b.get("idmax", 2**63 - 1))
+                (i, bl.bits, b.get("idmin", -(2**63)), b.get("idmax", 2**63 - 1))
             )
+        if not payload:
+            return kept
         bc = spark.sparkContext.broadcast(payload)
 
         def probe(batches):
             import pandas as pd
 
             remaining = {
-                i: (IntBloom(bits, m, k), mn, mx)
-                for i, bits, m, k, mn, mx in bc.value
+                i: (IntBloom(bits), mn, mx) for i, bits, mn, mx in bc.value
             }
             hit: set[int] = set()
             for pdf in batches:
@@ -153,7 +153,7 @@ class IncrementalComponents:
                     # keeps the expected false-positive count ≈ fpp ×
                     # |in-range keys|, not fpp × |batch|
                     in_range = arr[(arr >= mn) & (arr <= mx)]
-                    if len(in_range) and bl.might_contain_any(in_range):
+                    if len(in_range) and bl.contains(in_range).any():
                         hit.add(i)
                         del remaining[i]
             yield pd.DataFrame({"run": sorted(hit)})
@@ -162,7 +162,7 @@ class IncrementalComponents:
             r["run"]
             for r in ids.mapInPandas(probe, "run int").distinct().collect()
         }
-        kept.extend(e for i, e in ((i, entries[i]) for i, _ in with_bloom) if i in hits)
+        kept.extend(entries[p[0]] for p in payload if p[0] in hits)
         # manifest order is immaterial to the union, but keep it stable
         kept.sort(key=lambda e: e["snapshot_id"])
         return kept

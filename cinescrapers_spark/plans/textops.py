@@ -5,8 +5,6 @@ fingerprints, postcode/regex extraction, title normalization.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,11 +25,8 @@ _EN_STOPS = ("the", "and", "of", "to", "is", "in", "that", "it", "was", "for")
 # its faster per-row kernels save, and the plain JVM expression wins
 # (same-host A/B: 5k docs/sf0.1 JVM 0.31 s vs Arrow 0.54 s; 50k docs/sf1.0
 # Arrow 0.58 s vs JVM 0.95 s — linear fit crosses over ~2e4 docs).
-# Env-overridable; unknown layouts count as huge, so production defaults
-# to the Arrow shape.
-TOKEN_ARROW_MIN_ROWS = int(
-    os.environ.get("SPARK_GRAFT_TOKEN_ARROW_MIN_ROWS", "20000")
-)
+# Unknown layouts count as huge, so production defaults to the Arrow shape.
+TOKEN_ARROW_MIN_ROWS = 20_000
 
 
 def q_token_count(spark: SparkSession, sf: str) -> DataFrame:

@@ -46,16 +46,6 @@ def page_outlinks(url_norm: str) -> list[str]:
     return out
 
 
-@lazy_pandas_udf("array<string>")
-def page_outlinks_udf(url_norm: pd.Series) -> pd.Series:
-    return url_norm.map(page_outlinks)
-
-
-@lazy_pandas_udf("boolean")
-def fetch_ok_udf(url_norm: pd.Series) -> pd.Series:
-    return url_norm.map(fetch_ok)
-
-
 _FILLER = (
     "<nav><ul>" + "".join(f"<li><a href='/menu/{i}'>item {i}</a></li>" for i in range(40))
     + "</ul></nav><p>"

@@ -11,8 +11,9 @@ checkpoint, the streaming analogue of the engine's snapshot resume.
 
 Scale shape: state is per-HOST (the politeness/locality key), so state
 size distributes with the host distribution; a mega-host's set is one
-group but stays a compact binary blob (8 bytes/URL + bloom), the same
-arithmetic as the batch shards (SURVEY §4.3).
+group but stays a compact binary blob of 8 bytes/URL — the batch shards'
+key arithmetic (SURVEY §4.3). It carries no Bloom filter: the state is
+only ever probed exactly, by binary search over its sorted keys.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from cinescrapers_spark.crawl.seen import bloom_add, decode_shard, encode_shard
+from cinescrapers_spark.crawl.seen import decode_shard, encode_shard, exact_member
 
 OUT_SCHEMA = "host string, url string, url_hash long"
 STATE_SCHEMA = "data binary"
@@ -50,11 +51,7 @@ def _dedup_group(
             subset=["url_hash"]
         )
         h = pdf["url_hash"].to_numpy().astype(np.uint64)
-        if len(keys):
-            idx = np.clip(np.searchsorted(keys, h), 0, len(keys) - 1)
-            seen = keys[idx] == h
-        else:
-            seen = np.zeros(len(h), dtype=bool)
+        seen = exact_member(keys, h)
         fresh = pdf[~seen]
         if len(fresh):
             keys = np.union1d(keys, h[~seen])
@@ -65,10 +62,7 @@ def _dedup_group(
                     "url_hash": fresh["url_hash"].to_numpy(),
                 }
             )
-    bloom = np.zeros(1024, dtype=np.uint8)
-    if len(keys):
-        bloom_add(bloom, keys)
-    state.update((bytearray(encode_shard(keys, bloom)),))
+    state.update((bytearray(encode_shard(keys, np.empty(0, dtype=np.uint8))),))
 
 
 def dedup_url_stream(url_stream: DataFrame) -> DataFrame:

@@ -9,32 +9,53 @@ import pytest
 from cinescrapers_spark.crawl.engine import CrawlEngine
 from cinescrapers_spark.crawl.frontier import synthetic_seed_urls
 from cinescrapers_spark.crawl.reference_model import ReferenceCrawl
-from cinescrapers_spark.crawl.seen import (
-    SeenSet,
-    bloom_add,
-    bloom_maybe,
-    decode_shard,
-    encode_shard,
-)
+from cinescrapers_spark.crawl.seen import SeenSet, decode_shard, encode_shard
 from cinescrapers_spark.crawl.snapshots import SnapshotTable
 from cinescrapers_spark.dims import hosts_df
+from cinescrapers_spark.plans.bloom import BITS_PER_KEY, N_HASHES, IntBloom
 
 N_TICKS = 3
 N_SEEDS = 300
 
 
 def test_shard_codec_roundtrip():
-    keys = np.sort(np.random.default_rng(1).integers(0, 2**63, 1000, dtype=np.uint64))
-    bloom = np.zeros(4096, dtype=np.uint8)
-    bloom_add(bloom, keys)
-    k2, b2 = decode_shard(encode_shard(keys, bloom))
+    rng = np.random.default_rng(1)
+    keys = np.sort(rng.integers(0, 2**64 - 1, 20_000, dtype=np.uint64))
+    bloom = IntBloom.build(keys)
+    assert bloom.m == 8 * len(bloom.bits) == len(keys) * BITS_PER_KEY
+    k2, b2 = decode_shard(encode_shard(keys, bloom.bits))
     assert np.array_equal(keys, k2)
-    assert np.array_equal(bloom, b2)
-    assert bloom_maybe(b2, keys).all()  # no false negatives, ever
-    probe = np.random.default_rng(2).integers(0, 2**63, 2000, dtype=np.uint64)
+    assert np.array_equal(bloom.bits, b2)
+    # no false negatives, ever — and int64/uint64 views of a key probe alike
+    assert IntBloom(b2).contains(keys).all()
+    assert IntBloom(b2).contains(keys.view(np.int64)).all()
+    probe = rng.integers(0, 2**64 - 1, 200_000, dtype=np.uint64)
     fresh = probe[~np.isin(probe, keys)]
-    fpr = bloom_maybe(b2, fresh).mean()
-    assert fpr < 0.05
+    design = (1 - np.exp(-N_HASHES / BITS_PER_KEY)) ** N_HASHES  # ≈0.82%
+    fpr = IntBloom(b2).contains(fresh).mean()
+    assert fpr < 1.5 * design, f"measured fpr {fpr:.4%}, design {design:.4%}"
+
+
+def test_seen1_blob_refused():
+    """A blob of the earlier filter layout must not be probed with this
+    hash scheme (false negatives would re-fetch seen URLs)."""
+    keys = np.arange(1, 6, dtype=np.uint64)
+    blob = encode_shard(keys, IntBloom.build(keys).bits)
+    assert np.array_equal(decode_shard(blob)[0], keys)
+    with pytest.raises(ValueError, match="SEEN2"):
+        decode_shard(b"SEEN1" + blob[5:])
+
+
+def test_bloom_sidecar_layout_checked(tmp_path):
+    """A sidecar whose m is not its whole bit array (the earlier sizing
+    rule) is refused on load rather than probed with the wrong modulus."""
+    ids = np.arange(-50, 50, dtype=np.int64)
+    IntBloom.build(ids).save(str(tmp_path / "ok.npz"))
+    assert IntBloom.load(str(tmp_path / "ok.npz")).contains(ids).all()
+    bits = IntBloom.build(ids).bits
+    np.savez(str(tmp_path / "old.npz"), bits=bits, m=8 * len(bits) - 3, k=N_HASHES)
+    with pytest.raises(ValueError, match="layout"):
+        IntBloom.load(str(tmp_path / "old.npz"))
 
 
 def test_seen_set_probe_insert(spark, tmp_path):
@@ -259,9 +280,7 @@ def test_seen_run_commits_are_o_changes(spark, tmp_path):
     state writes tiny bytes; compaction folds runs into one base."""
     from pyspark.sql import functions as F
 
-    # small blooms so key bytes dominate blob size at test scale
-    seen = SeenSet(SnapshotTable(str(tmp_path / "s")), num_shards=4,
-                   bloom_bytes_per_shard=256)
+    seen = SeenSet(SnapshotTable(str(tmp_path / "s")), num_shards=4)
     big = spark.range(0, 50_000).select(F.xxhash64("id").alias("url_hash"))
     seen.add(big, tick=0)
     small = spark.range(50_000, 50_100).select(F.xxhash64("id").alias("url_hash"))
@@ -281,6 +300,11 @@ def test_seen_run_commits_are_o_changes(spark, tmp_path):
     # compaction: one base subsumes the runs; probes stay exact
     seen.compact(spark, tick=2)
     assert seen.table.entry_for(2, tag="base") is not None
+    # every segment's bloom is sized from its own keys: ≤ 2 B/key + 8 B
+    for r in seen._state_df(spark).collect():
+        keys, bits = decode_shard(r.data)
+        assert len(bits) <= 2 * len(keys) + 8
+        assert IntBloom(bits).contains(keys).all()
     assert seen.filter_unseen(big.union(small)).count() == 0
     probe = spark.range(60_000, 60_050).select(F.xxhash64("id").alias("url_hash"))
     assert seen.filter_unseen(probe).count() == 50
