@@ -7,6 +7,7 @@ Each module exposes ``QUERIES: dict[name, (spark_fn, oracle_sql | None)]``;
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -133,12 +134,12 @@ def _effective_scan_parallelism(path: str) -> int:
     contains its midpoint, so a single-file single-row-group table is read
     by ONE task no matter how small ``maxPartitionBytes`` is. Driver-side
     footer peek (same class of metadata read as Spark's own file listing);
-    memoized per path — file metadata, never data or results."""
+    memoized per ``_memo_key`` — file metadata, never data or results."""
     import glob
-    import os
 
-    if path in _SCAN_PAR_CACHE:
-        return _SCAN_PAR_CACHE[path]
+    key = _memo_key(path)
+    if key in _SCAN_PAR_CACHE:
+        return _SCAN_PAR_CACHE[key]
     try:
         import pyarrow.parquet as pq
 
@@ -146,39 +147,52 @@ def _effective_scan_parallelism(path: str) -> int:
         n = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
     except Exception:
         n = 10**9  # unknown layout: assume splittable, never repartition
-    _SCAN_PAR_CACHE[path] = max(n, 1)
-    return _SCAN_PAR_CACHE[path]
+    _SCAN_PAR_CACHE[key] = max(n, 1)
+    return _SCAN_PAR_CACHE[key]
 
 
-_SCAN_PAR_CACHE: dict[str, int] = {}
+def _memo_key(path: str) -> tuple:
+    """Footer-peek memo key: the path with its mtime and size, so a table
+    rewritten in place within one process is peeked again."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return (path, None, None)
+    return (path, st.st_mtime_ns, st.st_size)
+
+
+_SCAN_PAR_CACHE: dict[tuple, int] = {}
 
 
 def table_num_rows(sf_dir: str, table: str) -> int:
     """Row count of one testdata table from the parquet FOOTER (driver-side
     metadata peek, same class of read as ``_effective_scan_parallelism`` —
-    never data or results; memoized per path). Used to pick between two
-    equivalent plan shapes whose fixed overheads amortize at different
-    scales (e.g. an Arrow python stage vs a JVM expression). Unknown
-    layout returns a large count: at unknown (production) scale the
-    big-data shape is the right default."""
+    never data or results; memoized per ``_memo_key``). Used to pick
+    between two equivalent plan shapes whose fixed overheads amortize at
+    different scales (e.g. an Arrow python stage vs a JVM expression).
+    Unknown layout returns a large count: at unknown (production) scale
+    the big-data shape is the right default. Without pyarrow it returns 0,
+    which picks the JVM shape: the Arrow shape needs pyarrow itself."""
     import glob
-    import os
 
     path = f"{sf_dir}/{table}.parquet"
-    if path in _NUM_ROWS_CACHE:
-        return _NUM_ROWS_CACHE[path]
+    key = _memo_key(path)
+    if key in _NUM_ROWS_CACHE:
+        return _NUM_ROWS_CACHE[key]
     try:
         import pyarrow.parquet as pq
-
+    except ImportError:
+        return 0
+    try:
         files = glob.glob(os.path.join(path, "*.parquet")) if os.path.isdir(path) else [path]
         n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     except Exception:
         n = 10**12
-    _NUM_ROWS_CACHE[path] = n
+    _NUM_ROWS_CACHE[key] = n
     return n
 
 
-_NUM_ROWS_CACHE: dict[str, int] = {}
+_NUM_ROWS_CACHE: dict[tuple, int] = {}
 
 
 def load(

@@ -10,9 +10,9 @@ candidates), never O(corpus):
 
 * ``bands`` runs: (doc_id, source, band_id, band_hash) — the skinny LSH
   index, appended per batch;
-* ``toks`` runs: (doc_id, source, thash sorted array<bigint>, ntoks) —
-  verification payloads (token HASHES, 8 B/token, same representation as
-  ``dedup.doc_token_table``), appended per batch.
+* ``toks`` runs: (doc_id, source, thash, ntoks) — verification payloads
+  (``dedup.hash_set``, as in ``dedup.doc_token_table``), appended per
+  batch.
 
 Plan shape per batch (the at-scale argument):
 
@@ -22,17 +22,21 @@ Plan shape per batch (the at-scale argument):
    sizes past the broadcast threshold you bucket the stored bands by
    band_hash and shuffle only the new side);
 2. within-batch candidates come from the batch's own tiny self-join;
-3. exact Jaccard verification joins candidate doc_ids against the stored
-   toks runs — shuffle ∝ candidates (at 100 TB the toks table is written
-   bucketed by doc_id exactly like ``doc_token_table``, making the
-   corpus side of the verify join shuffle-free);
+3. exact Jaccard verification (``dedup.jaccard_pairs``) joins candidate
+   doc_ids against the stored toks runs — shuffle ∝ candidates (at 100 TB
+   the toks table is written bucketed by doc_id exactly like
+   ``doc_token_table``, making the corpus side of the verify join
+   shuffle-free);
 4. the batch's bands+toks commit as idempotent per-(tick, table) runs —
    a crashed batch re-runs to the identical result.
 
-Equivalence: feeding a corpus in ANY batch split reproduces exactly the
+Equivalence: feeding a corpus in ANY batch split reproduces the
 full-batch ``q_dedup_minhash_lsh`` pair set — same minhash family, same
 band predicate, same verification (gated by
-``tests/test_plans.py::test_incremental_lsh_equals_batch``).
+``tests/test_plans.py::test_incremental_lsh_equals_batch``) — as long as
+no band bucket passes ``LSH_BUCKET_CAP``. It is therefore approximate in
+the same way: it can miss a pair that the exact ``q_dedup_jaccard`` keeps
+(measured misses in the ``plans/dedup.py`` docstring).
 """
 
 from __future__ import annotations
@@ -46,9 +50,13 @@ from cinescrapers_spark.crawl.snapshots import SnapshotTable
 from cinescrapers_spark.plans import load
 from cinescrapers_spark.plans.dedup import (
     _JACCARD_ORACLE,
-    JACCARD_THRESHOLD,
+    BAND_KEYS,
     _bands,
     _tokens,
+    hash_set,
+    jaccard_pairs,
+    oversized,
+    verify_sides,
 )
 
 BANDS_COLS = ["doc_id", "source", "band_id", "band_hash"]
@@ -86,78 +94,53 @@ class IncrementalNearDupIndex:
         (source, doc_a, doc_b, jaccard) with doc_a < doc_b.
 
         ``bucket_cap`` mirrors batch ``lsh_candidate_pairs``'s mega-bucket
-        skew kill (ADVICE r3: without it a boilerplate-heavy corpus turns
-        the stored-bands probe quadratic): band buckets whose size in the
-        index-SO-FAR (stored ∪ this batch) exceeds the cap are excluded
-        from candidate probing this batch; the skipped-bucket count is
-        surfaced as ``self.skipped_buckets_last_batch``. Divergence note:
-        batch mode caps on the FULL-corpus bucket size, so pairs a bucket
-        produced in batches before it crossed the cap are kept here but
-        dropped by batch mode — the cap is prefix-monotone, converging to
-        batch behavior for every pair discovered after the crossing. (The
-        default stays None so the oracle-checked equivalence to
-        q_dedup_minhash_lsh is exact; corpora with real mega-buckets
-        should pass LSH_BUCKET_CAP, as the streaming binding does.) At
-        100 TB the bucket sizes come from an accumulated per-batch stats
-        run (LSM-compacted like crawl/seen), not the groupBy below —
-        same semantics, O(distinct buckets) per batch."""
+        skew kill: band buckets whose size in the index-SO-FAR (stored ∪
+        this batch) exceeds the cap are excluded from candidate probing
+        this batch; the skipped-bucket count is surfaced as
+        ``self.skipped_buckets_last_batch``. Batch mode caps on the
+        FULL-corpus bucket size, so pairs a bucket produced before it
+        crossed the cap are kept here but dropped by batch mode. With the
+        default None the output matches q_dedup_minhash_lsh wherever no
+        bucket passes its LSH_BUCKET_CAP; the streaming binding passes
+        LSH_BUCKET_CAP."""
         spark = docs.sparkSession
         toked = docs.select(
             "doc_id", "source", _tokens(F.col("text")).alias("toks")
         )
         new_bands = _bands(toked).cache()
         new_toks = toked.select(
-            "doc_id",
-            "source",
-            F.array_sort(
-                F.array_distinct(
-                    F.transform(F.col("toks"), lambda t: F.xxhash64(t))
-                )
-            ).alias("thash"),
+            "doc_id", "source", hash_set(F.col("toks")).alias("thash")
         ).withColumn("ntoks", F.size("thash"))
 
         stored_bands = self._runs(spark, self.bands_table, tick - 1)
 
-        # mega-bucket skew kill over the index-so-far (see docstring); the
-        # oversized set is tiny (it is the skew tail), so when non-empty it
-        # broadcasts into left_anti prunes of both probe sides — zero extra
-        # plan nodes in the common skipped==0 case
+        # the oversized set is tiny (it is the skew tail), so when
+        # non-empty it broadcasts into left_anti prunes of both probe
+        # sides — zero extra plan nodes in the common skipped==0 case
         probe_new, probe_stored = new_bands, stored_bands
         self.skipped_buckets_last_batch = 0
-        oversized = None
+        big = None
         if bucket_cap:
-            keys = ["source", "band_id", "band_hash"]
-            all_keys = new_bands.select(*keys)
+            all_bands = new_bands
             if stored_bands is not None:
-                all_keys = all_keys.unionByName(stored_bands.select(*keys))
-            oversized = (
-                all_keys.groupBy(*keys)
-                .agg(F.count("*").alias("bucket_size"))
-                .filter(F.col("bucket_size") > bucket_cap)
-                .drop("bucket_size")
-                .cache()
-            )
-            self.skipped_buckets_last_batch = oversized.count()
+                all_bands = all_bands.unionByName(stored_bands.select(*BANDS_COLS))
+            big = oversized(all_bands, bucket_cap).drop("bucket_size").cache()
+            self.skipped_buckets_last_batch = big.count()
             if self.skipped_buckets_last_batch:
-                probe_new = new_bands.join(F.broadcast(oversized), keys, "left_anti")
+                probe_new = new_bands.join(F.broadcast(big), BAND_KEYS, "left_anti")
                 if stored_bands is not None:
                     probe_stored = stored_bands.join(
-                        F.broadcast(oversized), keys, "left_anti"
+                        F.broadcast(big), BAND_KEYS, "left_anti"
                     )
 
         nb = F.broadcast(
-            probe_new.select(
-                F.col("doc_id").alias("n_id"),
-                "source",
-                "band_id",
-                "band_hash",
-            )
+            probe_new.select(F.col("doc_id").alias("n_id"), *BAND_KEYS)
         )
         pieces = []
         if probe_stored is not None:
             # cross candidates: stored index streams, new side broadcast
             pieces.append(
-                probe_stored.join(nb, ["source", "band_id", "band_hash"])
+                probe_stored.join(nb, BAND_KEYS)
                 .filter(F.col("doc_id") != F.col("n_id"))
                 .select(
                     "source",
@@ -167,7 +150,7 @@ class IncrementalNearDupIndex:
             )
         # within-batch candidates (tiny self-join)
         pieces.append(
-            probe_new.join(nb, ["source", "band_id", "band_hash"])
+            probe_new.join(nb, BAND_KEYS)
             .filter(F.col("doc_id") < F.col("n_id"))
             .select(
                 "source",
@@ -187,36 +170,13 @@ class IncrementalNearDupIndex:
             if stored_toks is None
             else new_toks.unionByName(stored_toks.select(*TOKS_COLS))
         )
-        ta = all_toks.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("thash").alias("ha"),
-            F.col("ntoks").alias("na"),
-        )
-        tb = all_toks.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("thash").alias("hb"),
-            F.col("ntoks").alias("nb"),
-        )
-        inter = F.size(F.array_intersect(F.col("ha"), F.col("hb"))).cast("double")
-        union = (F.col("na") + F.col("nb")).cast("double") - inter
-        pairs = (
-            cand.join(ta, "doc_a")
-            .join(tb, "doc_b")
-            .select(
-                "source",
-                "doc_a",
-                "doc_b",
-                F.round(inter / union, 4).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        )
-        out = pairs.cache()
+        ta, tb = verify_sides(all_toks)
+        out = jaccard_pairs(
+            cand.join(ta, "doc_a").join(tb, "doc_b"), ["source", "doc_a", "doc_b"]
+        ).cache()
         out.count()  # materialize before the index mutates
-        if oversized is not None:
-            # ADVICE r4: unpersist unconditionally — the streaming binding
-            # passes bucket_cap on every micro-batch, so the skipped>0
-            # branch leaked one cached DataFrame per capped batch
-            oversized.unpersist()
+        if big is not None:
+            big.unpersist()
 
         self.bands_table.commit(
             new_bands.select(*BANDS_COLS), tick=tick, row_count=-2,
@@ -234,10 +194,11 @@ def q_dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     """Registry query for the incremental index: feed ``documents`` to a
     FRESH persisted index in three batches (doc_id mod 3) and union the
     per-batch pair outputs. By the equivalence property this equals the
-    full-batch ``q_dedup_minhash_lsh`` output, so the exact-Jaccard SQL
-    is its oracle — the incremental path is oracle-checked end to end,
-    state commits included. (The index lives in a per-run temp dir; each
-    run rebuilds it from scratch, which keeps the query idempotent. The
+    full-batch ``q_dedup_minhash_lsh`` output, so it is checked against
+    the exact-Jaccard SQL like that plan, and can miss the same pairs —
+    the incremental path is oracle-checked end to end, state commits
+    included. (The index lives in a per-run temp dir; each run rebuilds
+    it from scratch, which keeps the query idempotent. The
     dir is DELETED before returning — ADVICE r3: repeated runs were
     accumulating parquet state on a disk-constrained sandbox — so the
     small pair set is collected and re-created as a local DataFrame whose

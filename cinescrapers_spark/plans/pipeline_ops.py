@@ -33,7 +33,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cinescrapers_spark.plans import load
-from cinescrapers_spark.plans.dedup import TOKEN_SPLIT
+from cinescrapers_spark.plans.dedup import (
+    TOKEN_SPLIT,
+    _ordered_tokens,
+    blocked_pairs,
+    hash_set,
+    jaccard_pairs,
+)
 
 NGRAM_N = 3
 # 3-gram Jaccard is much stricter than token-set Jaccard (word order and
@@ -50,28 +56,22 @@ WINNOW_K = 4  # tokens per k-gram
 WINNOW_W = 5  # k-gram hashes per winnowing window
 
 
-def _ordered_tokens(col):
-    """Order-preserving token list (NO array_distinct — shingles need the
-    sequence, unlike the set semantics in plans/dedup.py)."""
-    return F.filter(F.split(F.lower(col), TOKEN_SPLIT), lambda x: x != "")
-
-
-def shingles(toks_col, n: int = NGRAM_N):
-    """Distinct word n-grams as space-joined strings, JVM-side.
+def shingles(toks_col):
+    """Word n-grams (n = NGRAM_N) as space-joined strings, JVM-side, in
+    text order, repeats kept.
 
     transform's index lambda is 0-based and element_at is 1-based, so the
     shingle starting at 0-based position i is
     (x=toks[i], toks[i+1], ..., toks[i+n-1]) = element_at(i+2 .. i+n).
     """
+    n = NGRAM_N
     size = F.size(toks_col)
     heads = F.slice(toks_col, 1, F.greatest(size - (n - 1), F.lit(0)))
-    return F.array_distinct(
-        F.transform(
-            heads,
-            lambda x, i: F.concat_ws(
-                " ", x, *[F.element_at(toks_col, i + F.lit(j + 1)) for j in range(1, n)]
-            ),
-        )
+    return F.transform(
+        heads,
+        lambda x, i: F.concat_ws(
+            " ", x, *[F.element_at(toks_col, i + F.lit(j + 1)) for j in range(1, n)]
+        ),
     )
 
 
@@ -87,47 +87,21 @@ def q_dedup_ngram(spark: SparkSession, sf: str) -> DataFrame:
     to a column keeps CollapseProject from inlining the split per element
     (O(n) split re-evaluations otherwise).
 
-    Round 6: the pairwise intersection runs over xxhash64 SHINGLE HASHES
-    instead of the ~30-char shingle strings (8 B/element through the
-    self-join's shuffle and a long-compare intersect — the
-    ``doc_token_table`` trick; |∩| changes only on a 64-bit collision
-    inside one pair's union, p ≈ |union|²/2⁶⁴ < 1e-15). An exact
-    size-ratio prune (min/max ≥ 0.49994, integer math, strictly below the
-    round(·,4) ≥ 0.5 boundary) skips the intersect for pairs that cannot
-    clear θ, and the shingle pipeline is spread (guide §2.5)."""
+    The pairs are verified over the shingles' ``hash_set`` by
+    ``jaccard_pairs`` at θ = NGRAM_THRESHOLD, and the shingle pipeline is
+    spread (guide §2.5)."""
     docs = (
         load(spark, sf, "documents", spread=True)
         .select("doc_id", "source", _ordered_tokens(F.col("text")).alias("toks"))
-        .select("doc_id", "source", shingles(F.col("toks")).alias("sh"))
-        .select(
-            "doc_id",
-            "source",
-            F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("sh"),
-        )
-        .filter(F.size("sh") >= 1)
+        .select("doc_id", "source", hash_set(shingles(F.col("toks"))).alias("thash"))
+        .withColumn("ntoks", F.size("thash"))
+        .filter(F.col("ntoks") >= 1)
     )
-    a, b = docs.alias("a"), docs.alias("b")
-    ratio_ok = (
-        F.least(F.size("a.sh"), F.size("b.sh")).cast("long") * 100000
-        >= F.greatest(F.size("a.sh"), F.size("b.sh")).cast("long") * 49994
-    )
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh"))).cast("double")
-    union = (F.size("a.sh") + F.size("b.sh")).cast("double") - inter
-    jac = inter / union
-    return (
-        a.join(
-            b,
-            (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .filter(ratio_ok)
-        .select(
-            F.col("a.source").alias("source"),
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.round(jac, 4).alias("ngram_jaccard"),
-        )
-        .filter(F.col("ngram_jaccard") >= NGRAM_THRESHOLD)
+    return jaccard_pairs(
+        blocked_pairs(docs, "source"),
+        ["source", "doc_a", "doc_b"],
+        NGRAM_THRESHOLD,
+        "ngram_jaccard",
     )
 
 
@@ -172,12 +146,14 @@ def q_dedup_embed_cosine(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def kgram_hashes(toks_col, k: int = WINNOW_K):
-    """k-gram rolling hashes: h[i] = xxhash64(space-joined toks[i..i+k-1]).
+def kgram_hashes(toks_col):
+    """k-gram rolling hashes (k = WINNOW_K):
+    h[i] = xxhash64(space-joined toks[i..i+k-1]).
 
     ``toks_col`` must be a bound column (not an inline expression) — the
     slice per index reads it once per element.
     """
+    k = WINNOW_K
     n = F.size(toks_col)
     # sequence(1, 0) would generate DESCENDING [1, 0] — guard short docs
     return F.when(n < k, F.array().cast("array<bigint>")).otherwise(
@@ -188,11 +164,13 @@ def kgram_hashes(toks_col, k: int = WINNOW_K):
     )
 
 
-def winnow_minima(kgrams_col, w: int = WINNOW_W):
-    """Winnowing selection: distinct minima of each w-wide sliding window
-    over the k-gram hash array (a tail window shorter than w still
-    contributes — slice past the end returns the remainder — so every doc
-    with ≥1 k-gram has ≥1 fingerprint).  ``kgrams_col`` must be bound."""
+def winnow_minima(kgrams_col):
+    """Winnowing selection: distinct minima of each w-wide (w = WINNOW_W)
+    sliding window over the k-gram hash array (a tail window shorter than
+    w still contributes — slice past the end returns the remainder — so
+    every doc with ≥1 k-gram has ≥1 fingerprint).  ``kgrams_col`` must be
+    bound."""
+    w = WINNOW_W
     nk = F.size(kgrams_col)
     return F.when(nk <= 0, F.array().cast("array<bigint>")).otherwise(
         F.array_sort(

@@ -67,6 +67,49 @@ def test_blocked_selfjoins_are_equijoins(spark, sf_dir):
         )
 
 
+def _join_nodes(plan: str) -> dict[str, str]:
+    """Formatted-plan join node details, keyed by their left join keys."""
+    out = {}
+    for sec in plan.split("\n\n"):
+        m = re.match(r"\(\d+\) (\w*Join)", sec)
+        keys = re.search(r"Left keys \[\d+\]: \[([^\]]*)\]", sec)
+        if m and keys:
+            out[re.sub(r"#\d+L?", "", keys.group(1))] = m.group(1)
+    return out
+
+
+def test_shj_smj_boundary(spark, sf_dir):
+    """preferSortMergeJoin=false is session-wide (session.py); its failure
+    mode is a shuffled-hash build side too big for one task. Pin Spark's
+    guard on this session: a build side over autoBroadcastJoinThreshold
+    but under threshold × shuffle partitions, and ≥3× smaller than the
+    stream side, plans ShuffledHashJoin; an oversized one plans
+    SortMergeJoin. q_three_way_join's li⋈orders is on neither SHJ side of
+    that guard: the projected orders side is only ~2× smaller than
+    lineitem's, so it broadcasts at testdata size and sort-merges with
+    broadcast off — never a shuffled hash build of orders."""
+    small = spark.range(10**6).withColumnRenamed("id", "k")
+    mid = spark.range(10**8).withColumnRenamed("id", "k")
+    stream = spark.range(10**10).withColumnRenamed("id", "k")
+    size = small._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(size // 2))
+        assert int(spark.conf.get("spark.sql.shuffle.partitions")) >= 3
+        assert _join_nodes(_plan(stream.join(small, "k"))) == {
+            "k": "ShuffledHashJoin"
+        }
+        assert _join_nodes(_plan(stream.join(mid, "k"))) == {"k": "SortMergeJoin"}
+
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        off = _join_nodes(_plan(registry()["q_three_way_join"][0](spark, sf_dir)))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    on = _join_nodes(_plan(registry()["q_three_way_join"][0](spark, sf_dir)))
+    assert on["l_orderkey"] == "BroadcastHashJoin", on
+    assert off["l_orderkey"] == "SortMergeJoin", off
+
+
 def test_asof_join_compiles_to_pure_window(spark, sf_dir):
     """The distributed as-of must be a single partitioned window — ANY join
     node means the plan regressed to a per-key range product, which is the

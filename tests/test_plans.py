@@ -47,8 +47,9 @@ def test_driver_window_invariants():
 
 
 def test_minhash_lsh_matches_exact_jaccard(spark, sf_dir):
-    """LSH-verified pairs must equal exact-Jaccard pairs (band math bounds
-    the miss probability at ~3e-4 per pair at θ=0.8)."""
+    """LSH-verified pairs are a subset of the exact-Jaccard pairs and miss
+    at most 1% of them (band math puts the miss probability near 3e-4 per
+    pair at θ=0.8; the plan is approximate, not exact)."""
     from cinescrapers_spark.plans.dedup import q_dedup_jaccard, q_dedup_minhash_lsh
 
     exact = {
@@ -62,6 +63,55 @@ def test_minhash_lsh_matches_exact_jaccard(spark, sf_dir):
     assert lsh <= exact  # verification step guarantees no false positives
     missed = len(exact - lsh)
     assert missed <= max(1, int(0.01 * len(exact))), f"LSH missed {missed}/{len(exact)}"
+
+
+@pytest.mark.parametrize(
+    "theta, kept, dropped",
+    [
+        # (|a|, |b|) with b ⊆ a, so J = |b| / |a|
+        (0.8, [(5, 4), (10, 8), (20000, 15999)], [(10000, 7999), (4, 3)]),
+        (0.5, [(2, 1), (20000, 9999)], [(10000, 4999), (3, 1)]),
+    ],
+)
+def test_jaccard_kernel_boundary(spark, theta, kept, dropped):
+    """jaccard_pairs keeps pairs at exactly J = θ (4/5, 1/2) and at the
+    lowest J that rounds up to θ (θ − 0.00005), and drops the first J that
+    rounds below θ (θ − 0.0001): its size-ratio prune never cuts a pair
+    the θ filter keeps."""
+    from pyspark.sql import functions as F
+
+    from cinescrapers_spark.plans.dedup import jaccard_pairs
+
+    def seq(n):
+        return F.sequence(F.lit(1).cast("long"), F.col(n).cast("long"))
+
+    rows = list(enumerate(kept + dropped))
+    pairs = (
+        spark.createDataFrame([(i, a, b) for i, (a, b) in rows], "pid int, na int, nb int")
+        .withColumn("ha", seq("na"))
+        .withColumn("hb", seq("nb"))
+    )
+    got = {r.pid: r.j for r in jaccard_pairs(pairs, ["pid"], theta, "j").collect()}
+    assert got == {i: theta for i in range(len(kept))}
+
+
+def test_table_num_rows_sees_rewrites(tmp_path, monkeypatch):
+    """The footer-peek memo notices a table rewritten at another size in
+    the same process, and a missing pyarrow picks the JVM shape (0 rows)
+    instead of the Arrow shape that needs pyarrow."""
+    import sys
+
+    import pandas as pd
+
+    from cinescrapers_spark.plans import table_num_rows
+
+    path = tmp_path / "documents.parquet"
+    for n in (3, 7):
+        pd.DataFrame({"doc_id": range(n)}).to_parquet(path)
+        assert table_num_rows(str(tmp_path), "documents") == n
+    pd.DataFrame({"doc_id": range(11)}).to_parquet(path)
+    monkeypatch.setitem(sys.modules, "pyarrow.parquet", None)
+    assert table_num_rows(str(tmp_path), "documents") == 0
 
 
 def test_ann_lsh_recall_vs_bruteforce(spark, sf_dir):
@@ -142,13 +192,14 @@ def test_partitioned_topk_exact_and_bounded(spark):
         assert got == naive, f"partitioned_topk diverged at nparts={nparts}"
 
 
-def test_lsh_bucket_cap_skew_kill(spark):
+def test_lsh_bucket_cap_skew_kill(spark, monkeypatch):
     """A mega-bucket (boilerplate corpus) must be excluded from pair
     generation when over the cap, reported by lsh_oversized_buckets, and
     the cap must be a no-op on a healthy corpus."""
     import pandas as pd
     from pyspark.sql import functions as F
 
+    from cinescrapers_spark.plans import dedup
     from cinescrapers_spark.plans.dedup import (
         _tokens,
         lsh_candidate_pairs,
@@ -166,18 +217,19 @@ def test_lsh_bucket_cap_skew_kill(spark):
         "doc_id", "source", _tokens(F.col("text")).alias("toks")
     )
 
-    uncapped = lsh_candidate_pairs(docs, bucket_cap=None)
+    # the default cap is far above any bucket here: no pair is lost
+    assert dedup.LSH_BUCKET_CAP >= 40
+    uncapped = lsh_candidate_pairs(docs)
     assert uncapped.count() == 40 * 39 // 2 + 1  # quadratic blowup + the pair
+    assert lsh_oversized_buckets(docs).count() == 0
 
-    capped = lsh_candidate_pairs(docs, bucket_cap=10)
+    monkeypatch.setattr(dedup, "LSH_BUCKET_CAP", 10)
+    capped = lsh_candidate_pairs(docs)
     got = {(r.doc_a, r.doc_b) for r in capped.collect()}
     assert got == {(100, 101)}, "capped run must keep healthy-bucket pairs only"
 
-    over = lsh_oversized_buckets(docs, bucket_cap=10)
+    over = lsh_oversized_buckets(docs)
     assert over.count() > 0 and over.agg({"bucket_size": "max"}).first()[0] == 40
-
-    # cap far above any bucket: identical output to uncapped
-    assert lsh_candidate_pairs(docs, bucket_cap=1000).count() == uncapped.count()
 
 
 def test_lsh_cap_end_to_end_grouped_resolves(spark, tmp_path):
@@ -357,6 +409,7 @@ def test_simhash_band_pairs_complete_and_exact(spark, sf_dir):
     from cinescrapers_spark.plans import load
     from cinescrapers_spark.plans.dedup import (
         _tokens,
+        hash_set,
         q_dedup_simhash_band,
         simhash64,
     )
@@ -367,7 +420,8 @@ def test_simhash_band_pairs_complete_and_exact(spark, sf_dir):
     }
     sims = (
         load(spark, sf_dir, "documents")
-        .select("doc_id", simhash64(_tokens(F.col("text"))).alias("s"))
+        .select("doc_id", hash_set(_tokens(F.col("text"))).alias("h"))
+        .select("doc_id", simhash64(F.col("h")).alias("s"))
         .collect()
     )
     vals = {r.doc_id: r.s for r in sims}

@@ -16,15 +16,18 @@ by `partitioned_topk` over ALL candidates for the same queries. On a
 clustered corpus with nprobe=3 of 256 cells the audit should report
 recall ≈ 1 while scanning ~nprobe/256 of the corpus per query.
 
-Usage: python -m cinescrapers_spark.bench_ann --cpus 32 --vectors 1000000
+Usage: python tools/bench_ann.py --cpus 4 --vectors 1000000
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_CLUSTERS = 256
 DIM = 64

@@ -24,18 +24,22 @@ Pipeline under test (identical code paths to q_dedup_minhash_lsh):
   1. corpus materialization: doc_id-BUCKETED token-hash table — the
      production storage layout the verify joins read in place;
   2. `lsh_candidate_pairs` (band shuffle + bucket-cap skew kill);
-  3. exact-Jaccard verification joining the bucketed table twice
-     (candidate rows shuffle; the corpus does not).
+  3. exact-Jaccard verification (``jaccard_pairs``: round(J, 4) ≥ θ)
+     joining the bucketed table twice (candidate rows shuffle; the corpus
+     does not). The ground truth goes through the same verify.
 
-Usage: python -m cinescrapers_spark.bench_dedup --cpus 32 --docs 1000000
+Usage: python tools/bench_dedup.py --cpus 4 --docs 1000000
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 FAMILY_SIZE = 10
 BASE_TOKENS = 120
@@ -53,8 +57,13 @@ def main() -> None:
 
     from cinescrapers_spark.plans.dedup import (
         SCRATCH_BUCKETS,
+        blocked_pairs,
+        connected_components,
+        hash_set,
+        jaccard_pairs,
         lsh_candidate_pairs,
         lsh_oversized_buckets,
+        verify_sides,
     )
     from cinescrapers_spark.session import get_spark
 
@@ -109,13 +118,7 @@ def main() -> None:
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     shutil.rmtree(f"{wh}/{table}", ignore_errors=True)
     (
-        docs.select(
-            "doc_id",
-            "fam",
-            F.array_sort(
-                F.transform(F.col("toks"), lambda t: F.xxhash64(t))
-            ).alias("thash"),
-        )
+        docs.select("doc_id", "fam", hash_set(F.col("toks")).alias("thash"))
         .withColumn("ntoks", F.size("thash"))
         .write.bucketBy(SCRATCH_BUCKETS, "doc_id")
         .sortBy("doc_id")
@@ -135,25 +138,10 @@ def main() -> None:
     # ---- stage 3: exact verification against the bucketed table ------------
     t0 = time.time()
     tt = spark.table(table)
-    ta = tt.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("thash").alias("ha"),
-        F.col("ntoks").alias("na"),
-    )
-    tb = tt.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("thash").alias("hb"),
-        F.col("ntoks").alias("nb"),
-    )
-    inter = F.size(F.array_intersect("ha", "hb"))
-    jac = inter / (F.col("na") + F.col("nb") - inter)
-    verified = (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= args.theta)
-        .select("doc_a", "doc_b")
-    )
+    ta, tb = verify_sides(tt)
+    verified = jaccard_pairs(
+        cand.join(ta, "doc_a").join(tb, "doc_b"), ["doc_a", "doc_b"], args.theta
+    ).select("doc_a", "doc_b")
     n_pairs = verified.count()
     wall_verify = round(time.time() - t0, 2)
 
@@ -161,13 +149,8 @@ def main() -> None:
     # true near-dups only exist inside families; the blocked all-pairs
     # Jaccard (45 pairs/family) IS the exact answer at this corpus shape
     t0 = time.time()
-    ga = tt.select("fam", F.col("doc_id").alias("doc_a"), F.col("thash").alias("ha"), F.col("ntoks").alias("na"))
-    gb = tt.select("fam", F.col("doc_id").alias("doc_b"), F.col("thash").alias("hb"), F.col("ntoks").alias("nb"))
     truth = (
-        ga.join(gb, "fam")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= args.theta)
+        jaccard_pairs(blocked_pairs(tt, "fam"), ["doc_a", "doc_b"], args.theta)
         .select("doc_a", "doc_b")
         .cache()
     )
@@ -182,8 +165,6 @@ def main() -> None:
     # (b) no component spans two families (inter-family overlap is
     # negligible by construction, so a spanning label = a propagation bug)
     t0 = time.time()
-    from cinescrapers_spark.plans.dedup import connected_components
-
     verified = verified.cache()
     comp = connected_components(verified).cache()
     n_nodes = comp.count()

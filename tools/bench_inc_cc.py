@@ -17,17 +17,20 @@ end against the full-batch ``connected_components`` over all edges.
 Reported per batch: wall seconds, live runs vs runs the bloom probe kept
 (the pruning evidence), edges folded.
 
-Usage: python -m cinescrapers_spark.bench_inc_cc --cpus 32 --docs 1000000
+Usage: python tools/bench_inc_cc.py --cpus 4 --docs 1000000
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 FAMILY_SIZE = 10
 LATE_EVERY = 100
