@@ -20,7 +20,9 @@ every per-tick read is **as-of the parent tick**, so a tick interrupted
 between commits is simply re-run — it recomputes byte-identical deltas
 (deterministic schedule + deterministic fetch model) and each table skips
 the commits that already landed. Resumable from ANY point, not just tick
-boundaries (north_rule resumability; tested by killing mid-tick).
+boundaries (north_rule resumability; tested by killing mid-tick). So the
+commits run in order on one thread: marks, seen run + adds (one
+``SeenSet.admit``), image seen run + images (another).
 
 Per-tick metrics (scheduled/failed/items/links) are recovered driver-side
 from the written marks parquet via pyarrow footers+columns — scheduling a
@@ -217,15 +219,9 @@ class CrawlEngine:
             robots=self.robots,
             max_depth=self.max_depth,
         )
-        kernel = (
-            fetch_parse_harvest_udf if self.harvester is not None
-            else fetch_parse_expand_udf
-        )
-        extra = (
-            [F.col("__f.cards").alias("__cards")]
-            if self.harvester is not None
-            else []
-        )
+        harvest = self.harvester is not None
+        kernel = fetch_parse_harvest_udf if harvest else fetch_parse_expand_udf
+        extra = [F.col("__f.cards").alias("__cards")] if harvest else []
         fetched = (
             sched.withColumn("__f", kernel(F.col("url_norm")))
             .select(
@@ -241,7 +237,7 @@ class CrawlEngine:
         )
 
         # 2. marks delta: absolute per-URL state after this fetch, plus the
-        #    per-URL item/link counts the tick metrics need (read back
+        #    per-URL item/link/card counts the tick metrics need (read back
         #    driver-side from the written parquet — no aggregation job)
         # state machine: success resets the retry counter; failure
         # increments it and drops the row out permanently at MAX_RETRIES
@@ -261,6 +257,7 @@ class CrawlEngine:
             F.lit(t).alias("m_tick"),
             F.col("__n_items").alias("m_items"),
             F.size("__outlinks").alias("m_links"),
+            (F.size("__cards") if harvest else F.lit(0)).alias("m_cards"),
         )
         tj = time.time()
         marks_info = self.marks_table.commit(
@@ -296,8 +293,8 @@ class CrawlEngine:
         #    shuffle, so the seen-probe cogroup receives ~distinct narrow
         #    rows instead of the raw explode (its own in-kernel dedup stays
         #    as the cross-partition backstop). Measured: tick-3 probe step
-        #    at 8 cores 58 s → see BASELINE.md §D.2; the earlier dedup=False
-        #    "save a shuffle" reasoning priced the exchange but not the
+        #    at 8 cores 58 s → see BASELINE.md §D.2; skipping the groupBy
+        #    to "save a shuffle" priced the exchange but not the
         #    duplication volume it removes.
         new_rows = init_frontier(
             self.spark,
@@ -306,7 +303,6 @@ class CrawlEngine:
             tick=t,
             n_salts=self.n_salts,
             already_canonical=True,
-            dedup=True,
         )
         if not self.light_metrics:
             new_rows = new_rows.cache()
@@ -314,57 +310,31 @@ class CrawlEngine:
         # light_metrics: n_discovered = raw link count, filled in after the
         # stats thread joins (no extra Spark job)
 
-        # 4. fused seen probe + insert against state as-of t-1: one cogroup
-        #    shuffle yields both the unseen rows and this tick's run blobs
-        #    (touched shards only — O(new keys) write)
+        # 4. seen admit against state as-of t-1: one cogroup shuffle yields
+        #    both the unseen rows and this tick's run blobs (touched shards
+        #    only — O(new keys) write); the run commit fills the cache
+        # 5. adds commit from the cached unseen rows. Both commits are
+        #    idempotent per (tick, table) and every read is as-of t-1, so
+        #    they run in order: a crash between them re-runs to the same
+        #    bytes. row_count comes from the written footers (no job).
         tj = time.time()
-        unseen, new_shards, fused = self.seen.probe_and_add(new_rows, tick=t)
-        prev_total = self.seen.total_keys_as_of(t - 1)
-        fused.count()  # materialize the cogroup ONCE; both commits below
-        # read the cache, so they can run concurrently without racing to
-        # recompute it
-        timings["probe_cogroup"] = time.time() - tj
-
-        # 4b/5. seen-run + adds commits: two INDEPENDENT tables fed by the
-        #    same cached cogroup — their writes are latency-bound (small
-        #    files, job-scheduling gaps), so overlapping them removes the
-        #    smaller one's wall from the tick at every cluster width
-        #    (VERDICT r2 #2). The adds commit stays on the MAIN thread so
-        #    its failure surfaces in tick() exactly as before (the
-        #    mid-tick-crash resume contract); commit_shards errors re-raise
-        #    at join. Its row_count comes from its own parquet footers —
-        #    no dependence on the concurrent seen total.
-        tj = time.time()
-        seen_box: dict = {}
-
-        def _seen_commit() -> None:
-            try:
-                seen_box["total"] = self.seen.commit_shards(new_shards, tick=t)
-            except BaseException as e:
-                seen_box["err"] = e
-
-        seen_thread = threading.Thread(target=_seen_commit, daemon=True)
-        seen_thread.start()
-        try:
+        with self.seen.admit(new_rows, t) as (unseen, n_new):
+            timings["probe_cogroup"] = time.time() - tj
+            tj = time.time()
             self.adds_table.commit(
                 unseen.select(*_FRONTIER_COLS),
                 tick=t,
-                row_count=-2,  # count from written footers (driver-side)
+                row_count=-2,
                 idempotent=True,
             )
-        finally:
-            seen_thread.join()
-        if "err" in seen_box:
-            raise seen_box["err"]
-        total = seen_box["total"]
         timings["run_and_adds_commit"] = time.time() - tj
-        n_new = total - prev_total
 
         # 5b. image+caption harvest (axis B payload): explode this tick's
         #     parsed cards, dedup against the image seen-set, acquire only
-        #     the fresh ones, commit as the tick's images run
+        #     the fresh ones, commit as the tick's images run; the card
+        #     count (image_candidates) comes from the marks stats
         harvest_metrics = {}
-        if self.harvester is not None:
+        if harvest:
             tj = time.time()
             cards = fetched.filter(F.col("__ok")).select(
                 F.explode("__cards").alias("c")
@@ -377,7 +347,9 @@ class CrawlEngine:
         stats_thread.join()
         if "err" in stats_box:
             raise stats_box["err"]
-        (n_sched, n_fail, n_items, n_links), partition_stats = stats_box["v"]
+        (n_sched, n_fail, n_items, n_links, n_cards), partition_stats = stats_box["v"]
+        if harvest:
+            harvest_metrics["image_candidates"] = n_cards
         if self.light_metrics:
             n_discovered = n_links  # raw link count stands in (no extra job)
 
@@ -425,25 +397,26 @@ class CrawlEngine:
         fetched.unpersist()
         if not self.light_metrics:
             new_rows.unpersist()
-        fused.unpersist()
         return metrics
 
     def _marks_stats(
         self, snapshot_id: int
-    ) -> tuple[tuple[int, int, int, int], list[dict]]:
-        """((n_scheduled, n_failed, n_items, n_links), per-partition stats)
-        from the written marks parquet, summed driver-side — marks are one
-        row per scheduled URL and each part-file is one fetch task's
-        output, so per-file counters ARE the per-partition metrics."""
+    ) -> tuple[tuple[int, int, int, int, int], list[dict]]:
+        """((n_scheduled, n_failed, n_items, n_links, n_cards), per-partition
+        stats) from the written marks parquet, summed driver-side — marks
+        are one row per scheduled URL and each part-file is one fetch
+        task's output, so per-file counters ARE the per-partition metrics."""
         import pyarrow.parquet as pq
 
         snap_dir = self.marks_table.snapshot_dir(snapshot_id)
-        n = nf = ni = nl = 0
+        n = nf = ni = nl = nc = 0
         parts = []
         for f in sorted(
             glob.glob(os.path.join(snap_dir, "**", "*.parquet"), recursive=True)
         ):
-            tbl = pq.read_table(f, columns=["m_state", "m_items", "m_links"])
+            tbl = pq.read_table(
+                f, columns=["m_state", "m_items", "m_links", "m_cards"]
+            )
             states = tbl.column("m_state").to_pylist()
             pf = sum(1 for s in states if s.startswith("failed"))
             pi = int(sum(x or 0 for x in tbl.column("m_items").to_pylist()))
@@ -452,6 +425,7 @@ class CrawlEngine:
             nf += pf
             ni += pi
             nl += pl
+            nc += int(sum(x or 0 for x in tbl.column("m_cards").to_pylist()))
             if tbl.num_rows:
                 parts.append(
                     {
@@ -462,7 +436,7 @@ class CrawlEngine:
                         "links": pl,
                     }
                 )
-        return (n, nf, ni, nl), parts
+        return (n, nf, ni, nl, nc), parts
 
     def run(self, n_ticks: int) -> list[dict]:
         out = []

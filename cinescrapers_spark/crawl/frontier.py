@@ -149,19 +149,14 @@ def init_frontier(
     n_salts: int = DEFAULT_SALTS,
     base_url: str | None = None,
     already_canonical: bool = False,
-    dedup: bool = True,
 ) -> DataFrame:
-    """raw urls(url [,discovered_tick]) → canonical frontier rows (dedup by
-    url_norm keeping the lexicographically-first raw form).
+    """raw urls(url [,discovered_tick][,depth]) → canonical frontier rows,
+    one per url_norm, keeping the joint-min (depth, raw url) exemplar.
 
     ``already_canonical=True`` skips the canonicalizer UDF for inputs that
-    come out of a fused kernel (page_outlinks_canon_udf) — one less Python
-    eval stage on the per-tick hot path.
-
-    ``dedup=False`` skips the groupBy: the per-tick discovery path feeds
-    the seen-probe cogroup, which shuffles by url_hash anyway and dedups
-    duplicates in the same pass — paying a second shuffle here was pure
-    overhead."""
+    come out of the fused fetch kernel (``sources/pages.py``
+    ``fetch_parse_expand_udf``, whose outlinks are already canonical) —
+    one less Python eval stage on the per-tick hot path."""
     from cinescrapers_spark.functions.urls import canonicalize_url_udf, url_host
 
     if already_canonical:
@@ -176,34 +171,26 @@ def init_frontier(
     depth_in = (
         F.col("depth") if "depth" in raw_urls.columns else F.lit(0)
     )
-    if dedup:
-        # one frontier row per canonical URL; exemplar = JOINT min
-        # (depth, url) — BFS shortest-path depth first, then the
-        # lexicographic raw form (the reference model's _add_urls rule;
-        # independent min(url)/min(depth) could stitch the url of one
-        # duplicate to the depth of another). groupBy gives map-side
-        # partial combine, so duplicate-heavy discovery batches collapse
-        # BEFORE any shuffle — at a 10-20× within-tick duplication factor
-        # (boilerplate pagination links) this is the difference between
-        # shuffling 14M rows and 1M into the seen-probe cogroup.
-        dedup_df = canon.groupBy("url_norm").agg(
-            F.min(F.struct(depth_in.alias("d"), F.col("url").alias("u"))).alias(
-                "__e"
-            ),
-            tick_col.alias("discovered_tick"),
-        ).select(
-            "url_norm",
-            F.col("__e.u").alias("url"),
-            "discovered_tick",
-            F.col("__e.d").alias("__depth"),
-        )
-    else:
-        dedup_df = canon.select(
-            "url_norm",
-            "url",
-            F.lit(tick).alias("discovered_tick"),
-            depth_in.alias("__depth"),
-        )
+    # one frontier row per canonical URL; exemplar = JOINT min
+    # (depth, url) — BFS shortest-path depth first, then the
+    # lexicographic raw form (the reference model's _add_urls rule;
+    # independent min(url)/min(depth) could stitch the url of one
+    # duplicate to the depth of another). groupBy gives map-side
+    # partial combine, so duplicate-heavy discovery batches collapse
+    # BEFORE any shuffle — at a 10-20× within-tick duplication factor
+    # (boilerplate pagination links) this is the difference between
+    # shuffling 14M rows and 1M into the seen-probe cogroup.
+    dedup_df = canon.groupBy("url_norm").agg(
+        F.min(F.struct(depth_in.alias("d"), F.col("url").alias("u"))).alias(
+            "__e"
+        ),
+        tick_col.alias("discovered_tick"),
+    ).select(
+        "url_norm",
+        F.col("__e.u").alias("url"),
+        "discovered_tick",
+        F.col("__e.d").alias("__depth"),
+    )
     f = (
         dedup_df.withColumn("url_hash", F.xxhash64("url_norm"))
         .withColumn("host", url_host(F.col("url_norm")))

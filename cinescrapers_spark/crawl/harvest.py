@@ -19,9 +19,11 @@ with the three properties that matter at 10^10 scale:
   is the deterministic ``synth_image`` generator (a pure function of the
   image URL — the stand-in the whole fetch model uses,
   ``sources/pages.py``); production swaps one function;
-* **idempotent per-tick commits** — rows land as per-tick runs in a
+* **idempotent per-tick commits** — ``SeenSet.admit`` commits the image
+  seen run first, then the rows land as this tick's run in a
   ``SnapshotTable`` (O(new images) write; same MOR/lineage story as the
-  frontier), so a crashed tick re-harvests to a byte-identical run and the
+  frontier). Both reads are as of the parent tick, so a tick that crashes
+  between the two commits re-harvests to a byte-identical run and each
   commit dedups on (tick, table).
 
 Per-row invariants (input_hint): decoded pixels match the generator's
@@ -57,8 +59,6 @@ def _harvest_formats() -> tuple[str, ...]:
     CINESCRAPERS_HARVEST_FORMATS=qimg,ppm,png,jpeg,jpeg_prog to exercise
     the entropy codecs (incl. progressive JPEG) through the full harvest
     path (bench use)."""
-    import os
-
     return tuple(
         os.environ.get("CINESCRAPERS_HARVEST_FORMATS", "qimg,ppm,png").split(",")
     )
@@ -110,17 +110,13 @@ class ImageHarvester:
         )
 
     def harvest_tick(self, cards: DataFrame, tick: int) -> dict:
-        """cards(url, caption) for this tick → probe+register against the
-        image seen-set as-of tick-1 → synthesize/fetch ONLY the unseen →
-        commit as this tick's images run. Returns {'new_images': n,
-        'image_candidates': m} — m/n is the tick's image dedup factor (how
-        many card references collapsed onto one acquisition)."""
+        """cards(url, caption) for this tick → admit against the image
+        seen-set as-of tick-1 (its run commits first) → synthesize/fetch
+        ONLY the unseen → commit as this tick's images run, idempotently.
+        Returns {'new_images': n}."""
         cand = cards.withColumn("url_hash", SeenSet.hash_col(F.col("url"))).select(
             "url", "caption", "url_hash"
         )
-        n_cand = cand.count()
-        unseen, new_shards, fused = self.seen.probe_and_add(cand, tick=tick)
-
         cols = [f.name for f in IMAGES.fields]
 
         # AQE rightly coalesces the (url, caption) shuffle to ~1 partition
@@ -129,8 +125,7 @@ class ImageHarvester:
         # stage would cap harvest throughput at one core (measured: 2→8
         # cores gained nothing). Re-widen cheaply before the kernel: the
         # repartition shuffles strings, never pixels.
-        spark = cards.sparkSession
-        width = spark.sparkContext.defaultParallelism
+        width = cards.sparkSession.sparkContext.defaultParallelism
 
         def acquire(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
@@ -143,39 +138,21 @@ class ImageHarvester:
                     ]
                 )[cols]
 
-        rows = (
-            unseen.select("url", "caption")
-            .repartition(width)
-            .mapInPandas(acquire, schema=IMAGES)
-        )
-        existing = self.table.entry_for(tick, tag="run")
-        if existing is None:
-            info = self.table.commit(
-                rows, tick=tick, row_count=-1, tag="run", metrics={"kind": "run"}
+        with self.seen.admit(cand, tick) as (unseen, n_new):
+            rows = (
+                unseen.select("url", "caption")
+                .repartition(width)
+                .mapInPandas(acquire, schema=IMAGES)
             )
-            n_new = self._snapshot_rows(info.snapshot_id)
-        else:
-            n_new = self._snapshot_rows(existing["snapshot_id"])
-        self.seen.commit_shards(new_shards, tick=tick)
-        fused.unpersist()
-        return {"new_images": n_new, "image_candidates": n_cand}
-
-    def _snapshot_rows(self, snapshot_id: int) -> int:
-        import glob
-
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.read_metadata(f).num_rows
-            for f in glob.glob(
-                os.path.join(self.table.snapshot_dir(snapshot_id), "**", "*.parquet"),
-                recursive=True,
+            self.table.commit(
+                rows,
+                tick=tick,
+                row_count=-2,
+                tag="run",
+                metrics={"kind": "run"},
+                idempotent=True,
             )
-        )
-
-    def max_tick(self) -> int:
-        latest = self.table.latest()
-        return latest["tick"] if latest else 0
+        return {"new_images": n_new}
 
     def read(self, spark: SparkSession, as_of: int | None = None) -> DataFrame:
         """The harvested images table: union of all runs ≤ as_of (rows are

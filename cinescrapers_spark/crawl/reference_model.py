@@ -192,6 +192,7 @@ class ReferenceCrawl:
 
         discovered: list[tuple[str, int]] = []
         card_batch: dict[str, str] = {}  # image_url -> min caption this tick
+        n_cards = 0  # card references on pages that fetched OK
         n_fail = 0
         for r in scheduled:
             ok, links, _n_items = fetch_and_parse(r.url_norm)
@@ -202,7 +203,9 @@ class ReferenceCrawl:
                 if self.harvest:
                     from cinescrapers_spark.sources.pages import parse_cards
 
-                    for caption, img in parse_cards(r.url_norm):
+                    cards = parse_cards(r.url_norm)
+                    n_cards += len(cards)
+                    for caption, img in cards:
                         # exemplar = min (url, caption) within the tick,
                         # first tick wins across ticks (engine-kernel parity)
                         if img not in card_batch or caption < card_batch[img]:
@@ -229,6 +232,7 @@ class ReferenceCrawl:
         }
         if self.harvest:
             out["new_images"] = n_new_images
+            out["image_candidates"] = n_cards
         return out
 
     def run(self, n_ticks: int) -> list[dict]:

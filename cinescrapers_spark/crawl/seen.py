@@ -27,7 +27,10 @@ Design (SURVEY §4.3):
   Probes union the newest base with the runs after it; ``compact`` folds
   base+runs into a fresh base, mirroring the frontier's MOR compaction;
 * every commit is idempotent per (tick, kind) → a crashed tick re-runs
-  against the state *as of its parent tick* and re-commits safely.
+  against the state *as of its parent tick* and re-commits safely;
+* ``SeenSet.admit`` is the one entry point for a tick's candidates (crawl
+  adds, image harvest, bootstrap): probe as of the parent tick, commit the
+  run, yield the unseen rows and the fresh-key count.
 
 At 10^10 URLs / P=4096 shards: ~2.44M hashes/shard = 19.5 MB exact +
 3.05 MB Bloom (10 bits/key, ≈0.8% false positives) in the compacted
@@ -41,6 +44,8 @@ import glob
 import json
 import os
 import struct
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -183,41 +188,57 @@ class SeenSet:
         )
         return unseen.drop("__shard")
 
-    # -- insert ---------------------------------------------------------------
-    def add(self, new_urls: DataFrame, tick: int, hash_col: str = "url_hash") -> None:
-        """Register new hashes: probe against state as of tick-1, write the
-        fresh keys as this tick's run (touched shards only — O(new keys))."""
-        _, new_shards, fused = self.probe_and_add(new_urls, tick, hash_col)
-        self.commit_shards(new_shards, tick=tick)
-        fused.unpersist()
-
-    # -- fused probe+insert -----------------------------------------------------
-    def probe_and_add(
+    # -- admit: probe + insert in one cogroup ---------------------------------
+    @contextmanager
+    def admit(
         self, candidates: DataFrame, tick: int, hash_col: str = "url_hash"
-    ):
-        """ONE cogroup pass against the state as of ``tick - 1``: filter
-        candidates AND produce this tick's run blobs (fresh keys only, per
-        touched shard). Output is the unseen candidate rows; the first row
-        of each touched shard also carries that shard's run blob in
-        ``shard_id``/``data``/``n_keys`` (null ``data`` elsewhere). Halves
-        the candidate shuffle vs probe-then-add and drops a barrier from
-        the tick.
+    ) -> Iterator[tuple[DataFrame, int]]:
+        """Admit this tick's candidates: probe them against the state as of
+        ``tick - 1`` and commit the fresh keys as this tick's run, in ONE
+        cogroup pass. Yields ``(unseen, n_fresh)``: the unseen candidate
+        rows (one per fresh hash) and how many keys the run added.
+
+        The run commit (idempotent per tick) is the job that fills the
+        cached cogroup, so ``unseen`` reads from the cache; the cache is
+        dropped on exit, exception or not. Every read is as of the parent
+        tick, so a tick that crashes after its run landed re-runs to the
+        byte-identical ``unseen`` — callers commit their own payload of it
+        inside the block, idempotently, and need no other ordering."""
+        fused = self._probe_and_add(candidates, tick, hash_col)
+        try:
+            unseen = fused.select(*[f"`{c}`" for c in candidates.columns])
+            run = fused.filter(F.col("data").isNotNull()).select(
+                "shard_id", "data", "n_keys"
+            )
+            total = self._commit_shards(run, tick)
+            yield unseen, total - self.total_keys_as_of(tick - 1)
+        finally:
+            fused.unpersist()
+
+    def add(self, new_urls: DataFrame, tick: int, hash_col: str = "url_hash") -> None:
+        """Register new hashes as this tick's run (touched shards only —
+        O(new keys))."""
+        with self.admit(new_urls, tick, hash_col):
+            pass
+
+    def _probe_and_add(
+        self, candidates: DataFrame, tick: int, hash_col: str
+    ) -> DataFrame:
+        """ONE cogroup pass against the state as of ``tick - 1`` that both
+        filters the candidates AND builds this tick's run blobs (fresh keys
+        only, per touched shard). Output is the unseen candidate rows; the
+        first row of each touched shard also carries that shard's run blob
+        in ``shard_id``/``data``/``n_keys`` (null ``data`` elsewhere).
 
         Within-batch duplicates (the same URL discovered on two pages this
         tick) collide in their shard and are deduped here, keeping the
         lexicographically-first exemplar row — the reference model's
-        ``min(url)`` rule (reference_model.py _add_urls). Reading state
-        as-of the parent tick makes a re-run of a crashed tick recompute
-        byte-identical outputs (torn-commit safety).
+        ``min(url)`` rule (reference_model.py _add_urls).
 
-        Returns (unseen_df, run_shards_df, fused_cached): the first two are
-        filters over one CACHED cogroup output; call ``commit_shards`` with
-        the run, then unpersist the cache.
-        """
+        Returns the CACHED cogroup output."""
         spark = candidates.sparkSession
         shards = self._state_df(spark, as_of=tick - 1)
         cand = candidates.withColumn("__shard", self.shard_col(F.col(hash_col)))
-        cand_fields = [f"`{c}`" for c in candidates.columns]
         out_schema = (
             "shard_id int, data binary, n_keys long, "
             + ", ".join(
@@ -260,37 +281,34 @@ class SeenSet:
                 n_keys=len(fresh),
             )[out_cols]
 
-        fused_out = (
+        return (
             cand.groupBy("__shard")
             .cogroup(shards.groupBy("shard_id"))
             .applyInPandas(fused, schema=out_schema)
             .cache()
         )
-        unseen = fused_out.select(*cand_fields)
-        new_shards = fused_out.filter(F.col("data").isNotNull()).select(
-            "shard_id", "data", "n_keys"
-        )
-        return unseen, new_shards, fused_out
 
-    def commit_shards(self, new_shards: DataFrame, tick: int) -> int:
+    def _commit_shards(self, new_shards: DataFrame, tick: int) -> int:
         """Write this tick's run snapshot (idempotent per tick); return the
         total key count as of this tick. Runs hold only fresh keys, so
         total = total(tick-1) + run size, both read from parquet footers /
-        the manifest — no Spark job."""
-        existing = self.table.entry_for(tick, tag="run")
-        if existing is not None:
-            return int(existing["metrics"]["total_keys"])
-        prev_total = self.total_keys_as_of(tick - 1)
+        the manifest — no Spark job. The total lands on the run's manifest
+        entry in a second write, so a re-run after a crash between the two
+        finds the run committed and stashes its total then."""
         info = self.table.commit(
             new_shards,
             tick=tick,
             row_count=-1,
             tag="run",
             metrics={"kind": "run"},
+            idempotent=True,
         )
-        fresh = self._sum_keys_from_snapshot(info.snapshot_id)
-        total = prev_total + fresh
-        self._stash_total(total)
+        if "total_keys" in info.metrics:
+            return int(info.metrics["total_keys"])
+        total = self.total_keys_as_of(tick - 1) + self._sum_keys_from_snapshot(
+            info.snapshot_id
+        )
+        self._stash_total(info.snapshot_id, total)
         return total
 
     def compact(self, spark: SparkSession, tick: int) -> None:
@@ -326,11 +344,12 @@ class SeenSet:
             metrics={"kind": "base", "total_keys": total},
         )
 
-    def _stash_total(self, total: int) -> None:
-        """Record the running total on the just-written manifest entry, so
-        later ticks read it without a Spark job."""
+    def _stash_total(self, snapshot_id: int, total: int) -> None:
+        """Record the running total on the run's manifest entry, so later
+        ticks read it without a Spark job."""
         entries = self.table.manifest()
-        entries[-1]["metrics"]["total_keys"] = total
+        entry = next(e for e in entries if e["snapshot_id"] == snapshot_id)
+        entry["metrics"]["total_keys"] = total
         tmp = self.table._manifest_path() + ".tmp"
         with open(tmp, "w") as f:
             json.dump(entries, f, indent=1, default=str)

@@ -45,13 +45,12 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Let the planner pick shuffled-hash over sort-merge when the
-        # build side fits (guide §3.1/§9): equal-size fact-fact joins skip
-        # both per-partition sorts. Same setting we would ship — AQE's
-        # skew handling still applies; env-overridable for A/B.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # build side fits: its per-partition size is under the broadcast
+        # threshold x shuffle partitions AND it is 3x smaller than the
+        # other side (spark.sql.shuffledHashJoinFactor), so equal-size
+        # fact-fact joins still sort-merge. test_shj_smj_boundary pins
+        # both sides of that boundary. AQE's skew handling still applies.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # Naive London wall-clock discipline (reference stores naive
         # datetimes; SURVEY §7.3) — keep session TZ fixed so ntz/tz casts
         # are deterministic across hosts.

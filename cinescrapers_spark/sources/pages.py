@@ -146,21 +146,3 @@ def fetch_parse_harvest_udf(url_norm: pd.Series) -> pd.DataFrame:
     in one pass over the body per URL."""
     rows = [_fetch_parse_full(u) for u in url_norm]
     return pd.DataFrame(rows, columns=["ok", "outlinks", "n_items", "cards"])
-
-
-@lazy_pandas_udf("array<string>")
-def page_outlinks_canon_udf(url_norm: pd.Series) -> pd.Series:
-    """Fused fetch-expand kernel: outlinks already canonicalized, one Python
-    eval node instead of outlink-UDF → explode → canonicalize-UDF (each
-    extra Python stage pays worker warmup across the executor fleet)."""
-    from cinescrapers_spark.functions.urls import canonicalize_url_py
-
-    def run(u):
-        out = []
-        for link in page_outlinks(u):
-            c = canonicalize_url_py(link)
-            if c is not None:
-                out.append(c)
-        return out
-
-    return url_norm.map(run)

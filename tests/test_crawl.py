@@ -274,6 +274,33 @@ def test_mid_tick_crash_resume(spark, tmp_path):
     assert a.seen.total_keys() == b2.seen.total_keys()
 
 
+def test_seen_run_resumes_after_crash_before_total(spark, tmp_path):
+    """A seen run's total_keys lands on its manifest entry in a second
+    write after the run commit. A crash between the two must leave a tick
+    that re-runs: the re-admit finds the run, stashes the total and yields
+    the same unseen rows and fresh-key count."""
+    from pyspark.sql import functions as F
+
+    seen = SeenSet(SnapshotTable(str(tmp_path / "s")), num_shards=4)
+    seen.add(spark.range(0, 100).select(F.xxhash64("id").alias("url_hash")), tick=0)
+    cand = spark.range(50, 200).select(F.xxhash64("id").alias("url_hash"))
+
+    def boom(*args):
+        raise RuntimeError("simulated crash before the total is stashed")
+
+    seen._stash_total = boom
+    with pytest.raises(RuntimeError):
+        seen.add(cand, tick=1)
+    del seen._stash_total
+    assert "total_keys" not in seen.table.entry_for(1, tag="run")["metrics"]
+
+    with seen.admit(cand, 1) as (unseen, n_fresh):
+        assert n_fresh == 100
+        assert unseen.count() == 100
+    assert seen.total_keys() == 200
+    assert len(seen.table.manifest()) == 2  # the run was not written twice
+
+
 def test_seen_run_commits_are_o_changes(spark, tmp_path):
     """Per-tick seen-set write bytes must scale with NEW keys, not total
     keys (the O(changes) LSM property): a tiny run over a huge existing

@@ -7,7 +7,8 @@
    ground truth (PSNR ≥ 40 dB for the lossy codec, exact for ppm), phash
    matches a recompute;
 3. dedup-before-fetch: no duplicate image_id across ticks;
-4. resumability: stop/re-instantiate mid-run → identical table;
+4. resumability: stop/re-instantiate mid-run, or crash a tick between
+   its image-seen and images commits → identical table;
 5. the harvest stage does not perturb the crawl itself.
 """
 
@@ -73,8 +74,11 @@ def test_harvest_matches_reference_byte_for_byte(spark, harvest_pair):
             row["phash"],
         )
     assert got == want
-    # per-tick new-image counts match too
+    # per-tick new-image and card-reference counts match too
     assert [m.get("new_images") for m in em] == [m["new_images"] for m in rm]
+    assert [m.get("image_candidates") for m in em] == [
+        m["image_candidates"] for m in rm
+    ]
 
 
 def test_harvest_row_invariants(spark, harvest_pair):
@@ -130,6 +134,44 @@ def test_harvest_resume_equivalence(spark, tmp_path):
     tb = {tuple(r) for r in b2.harvester.read(spark).collect()}
     assert ta == tb
     assert ta
+
+
+def test_harvest_torn_tick_resume(spark, tmp_path):
+    """Crash tick 2 inside the harvest, after the image-seen run landed and
+    before the images run: the tick stays incomplete, and a fresh engine
+    re-runs it to the uninterrupted table — the posters already marked
+    seen are re-acquired, because every read is as of the parent tick."""
+    hosts = hosts_df(spark, extra_hosts=["megacinema.example.com"])
+    seeds = synthetic_seed_urls(80, seed=37)
+    raw = spark.createDataFrame(seeds)
+
+    a = _engine(spark, tmp_path / "a", hosts)
+    a.bootstrap(raw)
+    a.run(2)
+
+    b = _engine(spark, tmp_path / "b", hosts)
+    b.bootstrap(raw)
+    b.run(1)
+    real_commit = b.harvester.table.commit
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("simulated crash before the images commit")
+
+    b.harvester.table.commit = boom
+    with pytest.raises(RuntimeError):
+        b.tick()
+    b.harvester.table.commit = real_commit
+    assert b.harvester.seen.table.entry_for(2, tag="run") is not None
+    assert b.harvester.table.latest()["tick"] == 1
+    assert b.current_tick() == 1
+
+    b2 = _engine(spark, tmp_path / "b", hosts)
+    b2.run(1)
+    assert b2.current_tick() == 2
+    ta = {tuple(r) for r in a.harvester.read(spark).collect()}
+    tb = {tuple(r) for r in b2.harvester.read(spark).collect()}
+    assert ta == tb and ta
+    assert b2.harvester.seen.total_keys() == len(tb)
 
 
 def test_harvest_survives_seen_compaction(spark, tmp_path):

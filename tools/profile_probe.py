@@ -1,6 +1,7 @@
-"""Isolate the seen-set probe+commit stage at a given parallelism: build an
-N-key state, probe M candidate rows (frontier-like width), commit the run.
-Reports wall per phase — the tool for chasing the probe stage's scaling.
+"""Isolate the seen-set admit stage at a given parallelism: build an N-key
+state, then admit M candidate rows (frontier-like width): one cogroup that
+probes them and commits the run. Reports wall per phase — the tool for
+chasing the probe stage's scaling.
 
 Usage: python tools/profile_probe.py <cpus> [state_keys] [cand_rows]
 """
@@ -60,19 +61,18 @@ cand = spark.range(
 
 for rep in range(2):
     t0 = time.time()
-    unseen, new_shards, fused = seen.probe_and_add(cand, tick=1 + rep)
-    n_unseen = unseen.count()  # forces the cogroup (and the cache)
-    t_probe = time.time() - t0
-    t0 = time.time()
-    seen.commit_shards(new_shards, tick=1 + rep)
-    t_commit = time.time() - t0
-    fused.unpersist()
+    with seen.admit(cand, tick=1 + rep) as (unseen, n_fresh):
+        # the run commit inside admit runs the cogroup and fills the cache
+        t_admit = time.time() - t0
+        t0 = time.time()
+        n_unseen = unseen.count()  # reads the cached unseen rows
+        t_read = time.time() - t0
     print(
         {
             "cpus": cpus, "rep": rep, "state_keys": state_keys,
-            "cand_rows": cand_rows, "n_unseen": n_unseen,
+            "cand_rows": cand_rows, "n_unseen": n_unseen, "n_fresh": n_fresh,
             "bootstrap_s": round(t_boot, 1),
-            "probe_s": round(t_probe, 1), "commit_s": round(t_commit, 1),
+            "admit_s": round(t_admit, 1), "cached_read_s": round(t_read, 1),
         },
         flush=True,
     )
