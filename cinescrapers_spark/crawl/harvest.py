@@ -121,7 +121,8 @@ class ImageHarvester:
 
         # AQE rightly coalesces the (url, caption) shuffle to ~1 partition
         # (it is a few MB of strings) — but the EXPENSIVE work is the
-        # acquisition kernel DOWNSTREAM of it (~1.5 ms/image), so a serial
+        # acquisition kernel DOWNSTREAM of it (~1.3 ms of CPU per image on
+        # one core for the qimg,ppm,png,jpeg,jpeg_prog mix), so a serial
         # stage would cap harvest throughput at one core (measured: 2→8
         # cores gained nothing). Re-widen cheaply before the kernel: the
         # repartition shuffles strings, never pixels.

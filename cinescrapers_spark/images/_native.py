@@ -9,8 +9,9 @@ Both recurrences are strict per-element scans (each output depends on the
 previous reconstructed element), so numpy cannot vectorize them along the
 scan axis — SIMD PNG decoders parallelize only across channels for the
 same reason. The honest fast path is a ~60-line C kernel: compiled lazily
-with the system ``cc`` into a per-process temp dir and loaded via ctypes,
-it decodes ~100× faster than the Python loop. EVERYTHING degrades
+with the system ``cc``, once per host and source text, into
+``<tempdir>/cinescrapers-native-<sha256 of the source>`` and loaded via
+ctypes, it decodes ~100× faster than the Python loop. EVERYTHING degrades
 gracefully: no compiler, a failed compile, or ``CINESCRAPERS_NO_NATIVE=1``
 falls back to the pure-Python implementations in ``codecs.py`` /
 ``multimodal.py``, which remain the reference semantics (equality gated in
@@ -20,6 +21,8 @@ falls back to the pure-Python implementations in ``codecs.py`` /
 from __future__ import annotations
 
 import ctypes
+import fcntl
+import hashlib
 import os
 import shutil
 import subprocess
@@ -1012,25 +1015,58 @@ _lib = None
 _tried = False
 
 
-def _build() -> ctypes.CDLL | None:
+def _compiled_so() -> str | None:
+    """Path of this source's compiled library, building it if this host
+    has none yet; None without a compiler, on a failed build, or when the
+    build dir is not private to this user (it sits in the shared temp dir
+    under a fixed name, so another user could otherwise plant the .so).
+    Builds take an exclusive lock in the dir and compile to a temporary
+    name that ``os.replace`` moves into place, so a failed or concurrent
+    build never leaves a partial ``kernels.so`` and each host compiles
+    once, not every Python worker."""
+    tag = hashlib.sha256(_C_SRC.encode()).hexdigest()[:16]
+    workdir = os.path.join(tempfile.gettempdir(), f"cinescrapers-native-{tag}")
+    so = os.path.join(workdir, "kernels.so")
+    os.makedirs(workdir, mode=0o700, exist_ok=True)
+    st = os.stat(workdir)
+    if st.st_uid != os.getuid() or st.st_mode & 0o022:
+        return None
+    if os.path.exists(so):
+        return so
     cc = shutil.which("cc") or shutil.which("gcc")
     if cc is None:
         return None
-    workdir = tempfile.mkdtemp(prefix="cinescrapers-native-")
-    src = os.path.join(workdir, "kernels.c")
-    so = os.path.join(workdir, "kernels.so")
-    with open(src, "w") as fh:
-        fh.write(_C_SRC)
+    with open(os.path.join(workdir, "build.lock"), "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if os.path.exists(so):  # built by another process while we waited
+            return so
+        src = os.path.join(workdir, "kernels.c")
+        tmp = so + ".tmp"
+        with open(src, "w") as fh:
+            fh.write(_C_SRC)
+        try:
+            subprocess.run(
+                [cc, "-O2", "-shared", "-fPIC", "-o", tmp, src],
+                check=True,
+                capture_output=True,
+                timeout=60,
+            )
+            os.replace(tmp, so)
+        except subprocess.SubprocessError:
+            return None
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+    return so
+
+
+def _build() -> ctypes.CDLL | None:
     try:
-        subprocess.run(
-            [cc, "-O2", "-shared", "-fPIC", "-o", so, src],
-            check=True,
-            capture_output=True,
-            timeout=60,
-        )
+        so = _compiled_so()
+        if so is None:
+            return None
         lib = ctypes.CDLL(so)
-    except (OSError, subprocess.SubprocessError):
-        shutil.rmtree(workdir, ignore_errors=True)
+    except OSError:
         return None
     u8p = np.ctypeslib.ndpointer(np.uint8, flags="C_CONTIGUOUS")
     lib.png_unfilter.restype = ctypes.c_long
@@ -1095,8 +1131,9 @@ def _build() -> ctypes.CDLL | None:
 
 def native_lib() -> ctypes.CDLL | None:
     """The compiled kernel library, or None (no compiler / disabled) —
-    compiled at most once per process; executor Python workers are reused
-    so the ~100 ms compile amortizes across every image in the partition."""
+    compiled once per host (see ``_compiled_so``) and loaded at most once
+    per process, so a fresh Python worker pays a ``dlopen``, not a
+    ~100 ms compile."""
     global _lib, _tried
     if not _tried:
         _tried = True

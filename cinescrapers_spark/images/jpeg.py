@@ -162,6 +162,28 @@ def _build_decoder(bits: list[int], vals: list[int]) -> dict[tuple[int, int], in
     return {(ln, c): s for s, (c, ln) in _build_codes(bits, vals).items()}
 
 
+def _code_arrays(*tables) -> tuple[np.ndarray, np.ndarray]:
+    """Canonical codes of each (BITS, HUFFVAL) table as read-only
+    (len(tables), 256) uint16 code and uint8 length arrays, one row per
+    table slot: the layout the C encode kernels take."""
+    codes = np.zeros((len(tables), 256), np.uint16)
+    lens = np.zeros((len(tables), 256), np.uint8)
+    for slot, tbl in enumerate(tables):
+        for sym, (code, ln) in _build_codes(*tbl).items():
+            codes[slot, sym] = code
+            lens[slot, sym] = ln
+    codes.flags.writeable = lens.flags.writeable = False
+    return codes, lens
+
+
+# The encoders' tables are static, so their codes are built once: dicts for
+# the Python emit paths, arrays (slots DC lum, DC chrom, AC lum, AC chrom)
+# for the C kernels.
+_DC_CODES = (_build_codes(*_DC_LUM), _build_codes(*_DC_CHROM))
+_AC_CODES = (_build_codes(*_AC_LUM), _build_codes(*_AC_CHROM))
+_SEQ_CODES, _SEQ_LENS = _code_arrays(_DC_LUM, _DC_CHROM, _AC_LUM, _AC_CHROM)
+
+
 class _BitWriter:
     def __init__(self) -> None:
         self.out = bytearray()
@@ -291,7 +313,7 @@ def _blockize(plane: np.ndarray) -> np.ndarray:
     blocks in raster order."""
     h, w = plane.shape
     ph, pw = -h % 8, -w % 8
-    p = np.pad(plane, ((0, ph), (0, pw)), mode="edge")
+    p = np.pad(plane, ((0, ph), (0, pw)), mode="edge") if ph or pw else plane
     bh, bw = p.shape[0] // 8, p.shape[1] // 8
     return p.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8), bh, bw
 
@@ -299,12 +321,14 @@ def _blockize(plane: np.ndarray) -> np.ndarray:
 def _quantize_plane(plane: np.ndarray, qt: np.ndarray) -> np.ndarray:
     """Level-shift, batched DCT, quantize → (n_blocks, 64) int32 in
     NATURAL order."""
-    blocks, _, _ = _blockize(plane.astype(np.float64) - 128.0)
+    blocks, _, _ = _blockize(np.subtract(plane, 128.0))
     # C f C^T as two BLAS matmuls (an unoptimized einsum measured 4 ms/img
-    # — 70% of encode wall; matmul broadcasts over the block axis)
+    # — 70% of encode wall; matmul broadcasts over the block axis). One
+    # gemm over all blocks at once rounds differently, so the bytes would
+    # change.
     coeff = _DCT @ blocks @ _DCT.T
-    q = np.round(coeff / qt.reshape(8, 8)).astype(np.int32)
-    return q.reshape(-1, 64)
+    coeff /= qt.reshape(8, 8)
+    return np.rint(coeff, out=coeff).astype(np.int32).reshape(-1, 64)
 
 
 def _encode_block(bw: "_BitWriter", blk: np.ndarray, pred: int, dc, ac) -> int:
@@ -343,8 +367,7 @@ def _python_entropy(coeffs, widths, samps, mcux, mcuy, restart_interval):
     """Reference pure-Python entropy encode (the semantics oracle for the
     C kernel — byte-identical output, gated in tests) and the only path
     that emits restart intervals."""
-    dc_codes = [_build_codes(*_DC_LUM), _build_codes(*_DC_CHROM)]
-    ac_codes = [_build_codes(*_AC_LUM), _build_codes(*_AC_CHROM)]
+    dc_codes, ac_codes = _DC_CODES, _AC_CODES
     bw = _BitWriter()
     pred = [0, 0, 0]
     entropy = bytearray()
@@ -373,7 +396,19 @@ def _python_entropy(coeffs, widths, samps, mcux, mcuy, restart_interval):
     return entropy
 
 
-def _native_entropy(coeffs, widths, samps, mcux, mcuy):
+def _mcu_rows(sh: int, sv: int, mcux: int, mcuy: int) -> np.ndarray:
+    """Block-row indices of an (sh, sv)-sampled component, mcux * sh
+    blocks wide, in interleaved MCU emission order: (mcuy, mcux, sv * sh)."""
+    my = np.arange(mcuy).reshape(mcuy, 1, 1, 1)
+    mx = np.arange(mcux).reshape(1, mcux, 1, 1)
+    by = np.arange(sv).reshape(1, 1, sv, 1)
+    bx = np.arange(sh).reshape(1, 1, 1, sh)
+    return ((my * sv + by) * (mcux * sh) + (mx * sh + bx)).reshape(
+        mcuy, mcux, sv * sh
+    )
+
+
+def _native_entropy(coeffs, samps, mcux, mcuy):
     """Try the C entropy-encode kernel: builds the emission-order zigzag
     block array (vectorized gather — MCU interleave for any sampling) and
     the per-block table/predictor slots, then one C call. Returns the
@@ -388,14 +423,8 @@ def _native_entropy(coeffs, widths, samps, mcux, mcuy):
     pat_dc: list[int] = []
     pat_ac: list[int] = []
     for ci, (sh, sv) in enumerate(samps):
-        my, mx = np.meshgrid(np.arange(mcuy), np.arange(mcux), indexing="ij")
-        by = np.arange(sv).reshape(1, 1, sv, 1)
-        bx = np.arange(sh).reshape(1, 1, 1, sh)
-        rows = (
-            (my[:, :, None, None] * sv + by) * widths[ci]
-            + (mx[:, :, None, None] * sh + bx)
-        ).reshape(mcuy, mcux, sv * sh)
-        gathered.append(coeffs[ci][rows])  # (mcuy, mcux, k_ci, 64)
+        # (mcuy, mcux, k_ci, 64); a plane is mcux * sh blocks wide
+        gathered.append(coeffs[ci][_mcu_rows(sh, sv, mcux, mcuy)])
         tsel = 0 if ci == 0 else 1
         pat_pred += [ci] * (sv * sh)
         pat_dc += [tsel] * (sv * sh)
@@ -404,19 +433,13 @@ def _native_entropy(coeffs, widths, samps, mcux, mcuy):
         np.concatenate(gathered, axis=2).reshape(-1, 64)[:, ZIGZAG]
     )
     n_mcu = mcux * mcuy
-    codes = np.zeros((4, 256), np.uint16)
-    lens = np.zeros((4, 256), np.uint8)
-    for slot, tbl in ((0, _DC_LUM), (1, _DC_CHROM), (2, _AC_LUM), (3, _AC_CHROM)):
-        for sym, (code, ln) in _build_codes(*tbl).items():
-            codes[slot, sym] = code
-            lens[slot, sym] = ln
     return jpeg_encode_blocks(
         emis,
         np.tile(np.array(pat_pred, np.uint8), n_mcu),
         np.tile(np.array(pat_dc, np.uint8), n_mcu),
         np.tile(np.array(pat_ac, np.uint8), n_mcu),
-        codes,
-        lens,
+        _SEQ_CODES,
+        _SEQ_LENS,
     )
 
 
@@ -427,14 +450,16 @@ def _prepare_coeffs(arr: np.ndarray, quality: int, subsampling: str):
     assert c == 3 and arr.dtype == np.uint8
     assert subsampling in ("444", "420")
     ql, qc = quality_tables(quality)
-    ycc = _rgb_to_ycbcr(arr)
     ysamp = (2, 2) if subsampling == "420" else (1, 1)
     hmax, vmax = ysamp
     # pad the image to full MCUs so every component's plane blockizes to
-    # exactly (mcuy*v, mcux*h) blocks
+    # exactly (mcuy*v, mcux*h) blocks; the color transform is per pixel,
+    # so padding the RGB bytes first pads the planes identically
     mw, mh = 8 * hmax, 8 * vmax
     pad_h, pad_w = -h % mh, -w % mw
-    ycc = np.pad(ycc, ((0, pad_h), (0, pad_w), (0, 0)), mode="edge")
+    if pad_h or pad_w:
+        arr = np.pad(arr, ((0, pad_h), (0, pad_w), (0, 0)), mode="edge")
+    ycc = _rgb_to_ycbcr(arr)
     planes = [ycc[..., 0], ycc[..., 1], ycc[..., 2]]
     if subsampling == "420":
         for i in (1, 2):
@@ -481,7 +506,7 @@ def encode_jpeg(
         # per-symbol Python loop below measured ~24 ms/image at harvest —
         # BASELINE.md §D-1.3); byte-identical output, restart streams
         # keep the Python path
-        entropy = _native_entropy(coeffs, widths, samps, mcux, mcuy)
+        entropy = _native_entropy(coeffs, samps, mcux, mcuy)
     if entropy is not None:
         entropy = bytearray(entropy)
     else:
@@ -529,6 +554,8 @@ _AC_PROG_SYMS = sorted(
     + [(r << 4) | s for r in range(16) for s in range(1, 11)]
 )
 _AC_PROG = ([0] * 8 + [len(_AC_PROG_SYMS)] + [0] * 7, _AC_PROG_SYMS)
+_AC_PROG_CODES = _build_codes(*_AC_PROG)
+_AC_PROG_CODE_ARR, _AC_PROG_LEN_ARR = (a[0] for a in _code_arrays(_AC_PROG))
 
 # IJG-shaped default scan script: (comp_indices, Ss, Se, Ah, Al)
 _PROG_SCRIPT_COLOR = [
@@ -646,14 +673,38 @@ def _enc_ac_refine(st: _ProgACState, blk, ss, se, al):
             st.flush_eobrun()
 
 
+def _scan_block_dims(comps_meta, ci, h, w) -> tuple[int, int]:
+    """(rows, cols) of component ``ci``'s real blocks: the grid a
+    single-component scan walks (T.81 A.2.2), not the MCU-padded one."""
+    hmax = max(m[0] for m in comps_meta)
+    vmax = max(m[1] for m in comps_meta)
+    sh, sv, _ = comps_meta[ci]
+    cw = -(-(w * sh) // hmax)
+    ch = -(-(h * sv) // vmax)
+    return -(-ch // 8), -(-cw // 8)
+
+
+def _zigzag_blocks(coeffs, comps_meta, mcux, h, w) -> list[np.ndarray]:
+    """Each component's blocks in single-component scan order, zigzagged,
+    as one contiguous (n, 64) int32 array. Gathered once per image and
+    shared by every scan the C kernels emit."""
+    out = []
+    for ci, (sh, _sv, _) in enumerate(comps_meta):
+        cbh, cbw = _scan_block_dims(comps_meta, ci, h, w)
+        rows = (np.arange(cbh)[:, None] * (mcux * sh) + np.arange(cbw)).reshape(-1)
+        out.append(coeffs[ci].take(rows, axis=0).take(ZIGZAG, axis=1))
+    return out
+
+
 def _native_prog_emit(
-    coeffs, comps_meta, scan_comps, ss, se, ah, al, mcux, mcuy, h, w,
+    blocks, coeffs, comps_meta, scan_comps, ss, se, ah, al, mcux, mcuy,
 ):
-    """Try the C progressive-encode kernels (one call per scan): builds
-    the emission-order DC/zigzag-block arrays with vectorized gathers and
-    hands the sequential bit-emission to C. Byte-identical to the Python
-    path (gated in tests); returns None without a compiler (caller runs
-    the Python loop). Restart streams keep the Python path."""
+    """Try the C progressive-encode kernels (one call per scan) over the
+    image's per-component zigzag arrays (``blocks``, from
+    ``_zigzag_blocks``); an interleaved DC scan gathers its MCU-order DC
+    values from ``coeffs``. Byte-identical to the Python path (gated in
+    tests); returns None without a compiler (caller runs the Python
+    loop). Restart streams keep the Python path."""
     from cinescrapers_spark.images._native import (
         jpeg_prog_encode_ac,
         jpeg_prog_encode_dc,
@@ -662,82 +713,49 @@ def _native_prog_emit(
 
     if native_lib() is None:
         return None
-    hmax = max(m[0] for m in comps_meta)
-    vmax = max(m[1] for m in comps_meta)
-
-    def comp_rows(ci):
-        sh, sv, _ = comps_meta[ci]
-        stride = mcux * sh
-        cw = -(-(w * sh) // hmax)
-        ch_ = -(-(h * sv) // vmax)
-        cbh, cbw = -(-ch_ // 8), -(-cw // 8)
-        return (
-            np.arange(cbh)[:, None] * stride + np.arange(cbw)[None, :]
-        ).reshape(-1)
-
-    if ss == 0:  # DC scan
-        if len(scan_comps) > 1:  # interleaved emission order
-            per_comp, slots = [], []
-            for ci in scan_comps:
-                sh, sv, _ = comps_meta[ci]
-                my, mx = np.meshgrid(
-                    np.arange(mcuy), np.arange(mcux), indexing="ij"
-                )
-                by = np.arange(sv).reshape(1, 1, sv, 1)
-                bx = np.arange(sh).reshape(1, 1, 1, sh)
-                rows = (
-                    (my[:, :, None, None] * sv + by) * (mcux * sh)
-                    + (mx[:, :, None, None] * sh + bx)
-                ).reshape(mcuy, mcux, sv * sh)
-                per_comp.append(coeffs[ci][rows][..., 0])
-                tsel = 0 if ci == 0 else 1
-                slots += [(ci << 1) | tsel] * (sv * sh)
-            dc0 = np.concatenate(per_comp, axis=2).reshape(-1)
-            pred_slot = np.tile(np.array(slots, np.uint8), mcux * mcuy)
-        else:
-            ci = scan_comps[0]
-            rows = comp_rows(ci)
-            dc0 = coeffs[ci][rows][:, 0]
-            pred_slot = np.full(
-                rows.shape[0], 0 if ci == 0 else 1, np.uint8
-            )  # predictor slot 0, table slot by component
-        codes2 = np.zeros((2, 256), np.uint16)
-        lens2 = np.zeros((2, 256), np.uint8)
-        for slot, tbl in ((0, _DC_LUM), (1, _DC_CHROM)):
-            for sym, (code, ln) in _build_codes(*tbl).items():
-                codes2[slot, sym] = code
-                lens2[slot, sym] = ln
-        return jpeg_prog_encode_dc(dc0, pred_slot, ah, al, codes2, lens2)
-
-    ci = scan_comps[0]  # AC scans are single-component
-    blocks = np.ascontiguousarray(coeffs[ci][comp_rows(ci)][:, ZIGZAG])
-    ac_codes = np.zeros(256, np.uint16)
-    ac_lens = np.zeros(256, np.uint8)
-    for sym, (code, ln) in _build_codes(*_AC_PROG).items():
-        ac_codes[sym] = code
-        ac_lens[sym] = ln
-    return jpeg_prog_encode_ac(blocks, ss, se, ah, al, ac_codes, ac_lens)
+    if ss > 0:  # AC scans are single-component
+        return jpeg_prog_encode_ac(
+            blocks[scan_comps[0]], ss, se, ah, al,
+            _AC_PROG_CODE_ARR, _AC_PROG_LEN_ARR,
+        )
+    if len(scan_comps) > 1:  # interleaved emission order
+        per_comp, slots = [], []
+        for ci in scan_comps:
+            sh, sv, _ = comps_meta[ci]
+            per_comp.append(coeffs[ci][_mcu_rows(sh, sv, mcux, mcuy), 0])
+            tsel = 0 if ci == 0 else 1
+            slots += [(ci << 1) | tsel] * (sv * sh)
+        dc0 = np.concatenate(per_comp, axis=2).reshape(-1)
+        pred_slot = np.tile(np.array(slots, np.uint8), mcux * mcuy)
+    else:
+        ci = scan_comps[0]
+        dc0 = blocks[ci][:, 0]  # zigzag index 0 is the DC
+        pred_slot = np.full(
+            dc0.shape[0], 0 if ci == 0 else 1, np.uint8
+        )  # predictor slot 0, table slot by component
+    return jpeg_prog_encode_dc(
+        dc0, pred_slot, ah, al, _SEQ_CODES[:2], _SEQ_LENS[:2]
+    )
 
 
 def _emit_progressive_scan(
-    coeffs, comps_meta, scan_comps, ss, se, ah, al, mcux, mcuy, h, w,
+    coeffs, blocks, comps_meta, scan_comps, ss, se, ah, al, mcux, mcuy, h, w,
     restart_interval,
 ):
     """Entropy bytes for one progressive scan. ``comps_meta`` is the
     per-component (samp_h, samp_v, dc_codes) list; geometry mirrors the
     decoder exactly (interleaved MCU grid for multi-component DC scans,
-    actual block dims for single-component scans). The hot path hands
-    the bit emission to the C kernels; this Python loop is the
+    actual block dims for single-component scans). With ``blocks`` (the
+    image's ``_zigzag_blocks``; None for restart streams) the hot path
+    hands the bit emission to the C kernels; this Python loop is the
     byte-identical reference and the restart-interval path."""
-    if restart_interval == 0:
+    if blocks is not None:
         fast = _native_prog_emit(
-            coeffs, comps_meta, scan_comps, ss, se, ah, al, mcux, mcuy, h, w
+            blocks, coeffs, comps_meta, scan_comps, ss, se, ah, al, mcux, mcuy
         )
         if fast is not None:
             return fast
-    hmax = max(m[0] for m in comps_meta)
-    vmax = max(m[1] for m in comps_meta)
-    ac_codes = _build_codes(*_AC_PROG)
+    ac_codes = _AC_PROG_CODES
     out = bytearray()
     bw = _BitWriter()
     st = _ProgACState(bw, ac_codes)
@@ -778,9 +796,7 @@ def _emit_progressive_scan(
         ci = scan_comps[0]
         sh, sv, dc_codes = comps_meta[ci]
         bw_stride = mcux * sh
-        cw = -(-(w * sh) // hmax)
-        ch = -(-(h * sv) // vmax)
-        cbh, cbw = -(-ch // 8), -(-cw // 8)
+        cbh, cbw = _scan_block_dims(comps_meta, ci, h, w)
         for by in range(cbh):
             for bx in range(cbw):
                 if restart_interval and unit_i and unit_i % restart_interval == 0:
@@ -819,12 +835,17 @@ def encode_jpeg_progressive(
     )
     if scans is None:
         scans = _PROG_SCRIPT_COLOR
-    dc_lum, dc_chrom = _build_codes(*_DC_LUM), _build_codes(*_DC_CHROM)
+    dc_lum, dc_chrom = _DC_CODES
     comps_meta = [
         (samps[0][0], samps[0][1], dc_lum),
         (1, 1, dc_chrom),
         (1, 1, dc_chrom),
     ]
+    blocks = (
+        _zigzag_blocks(coeffs, comps_meta, mcux, h, w)
+        if restart_interval == 0
+        else None
+    )
 
     out = bytearray(b"\xff\xd8")
     out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
@@ -850,8 +871,8 @@ def encode_jpeg_progressive(
         sos += bytes([ss, se, (ah << 4) | al])
         out += _seg(0xDA, sos)
         out += _emit_progressive_scan(
-            coeffs, comps_meta, scan_comps, ss, se, ah, al, mcux, mcuy, h, w,
-            restart_interval,
+            coeffs, blocks, comps_meta, scan_comps, ss, se, ah, al, mcux,
+            mcuy, h, w, restart_interval,
         )
     out += b"\xff\xd9"
     return bytes(out)

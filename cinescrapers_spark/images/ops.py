@@ -29,34 +29,33 @@ _DCT32 = _dct_matrix(32)
 
 
 def _resize_area(gray: np.ndarray, out: int = 32) -> np.ndarray:
-    """Area-style resize via index binning (deterministic, no deps)."""
+    """Area-style resize via index binning (deterministic, no deps): each
+    output row averages a band of ``max(1, h // out)`` source rows starting
+    at ``r * h // out``, then each output column averages its column bin
+    through one prefix sum. One gather for all bands; every sum runs in the
+    same order as a per-row loop, so the result is bit-identical to it."""
     h, w = gray.shape
-    ys = (np.arange(out) * h // out).astype(int)
-    ye = np.maximum(ys + max(1, h // out), ys + 1)
-    xs = (np.arange(out) * w // out).astype(int)
-    xe = np.maximum(xs + max(1, w // out), xs + 1)
-    res = np.empty((out, out), dtype=np.float64)
-    for r in range(out):
-        band = gray[ys[r] : ye[r]]
-        cs = np.cumsum(np.concatenate([[0.0], band.mean(axis=0)]))
-        res[r] = (cs[xe] - cs[xs]) / (xe - xs)
-    return res
+    band = max(1, h // out)
+    ys = np.arange(out) * h // out
+    xs = np.arange(out) * w // out
+    xe = xs + max(1, w // out)
+    cs = np.zeros((out, w + 1))
+    bands = gray[ys[:, None] + np.arange(band)]  # (out, band, w)
+    np.cumsum(bands.mean(axis=1), axis=1, out=cs[:, 1:])
+    return (cs[:, xe] - cs[:, xs]) / (xe - xs)
 
 
 def phash64(arr: np.ndarray) -> int:
     """32×32 gray → 2-D DCT-II → low-frequency 8×8 block (skipping DC) →
-    bits = coeff > median → packed signed int64."""
+    bits = coeff > median → packed signed int64 (bit 0 is the dropped DC,
+    always 0; bit i is coefficient i of the flattened block)."""
     gray = arr.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
     g32 = _resize_area(gray, 32)
     dct = _DCT32 @ g32 @ _DCT32.T
     block = dct[:8, :8].flatten()
-    coeffs = block[1:]  # drop DC
-    med = np.median(coeffs)
-    bits = np.concatenate([[0], (coeffs > med).astype(np.uint64)])
-    val = np.uint64(0)
-    for i, b in enumerate(bits):
-        val |= np.uint64(b) << np.uint64(i)
-    return int(val.astype(np.int64))
+    bits = block > np.median(block[1:])
+    bits[0] = False  # DC
+    return int(np.packbits(bits, bitorder="little").view("<i8")[0])
 
 
 @lazy_pandas_udf("long")

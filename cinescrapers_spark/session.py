@@ -65,6 +65,13 @@ def get_spark(
         # the same knob you drop when the network is fast relative to task
         # length.
         .config("spark.locality.wait", "0s")
+        # Python workers fork from cinescrapers_spark.pydaemon: pyspark's
+        # own daemon, except that the per-task importlib.invalidate_caches()
+        # no longer re-reads the pyspark/py4j zip directories unless they
+        # changed (58-84 ms of CPU per task, measured on Python 3.11).
+        # Workers import the engine package to run its UDFs anyway, so the
+        # module is importable wherever they are.
+        .config("spark.python.daemon.module", "cinescrapers_spark.pydaemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
